@@ -169,7 +169,7 @@ def run_flagship(spark, n_pages: int) -> dict:
             "overwrite"
         ).parquet(pages_dir)
         pages = spark.read.parquet(pages_dir)
-        # warmup: python workers + codegen on a slice
+        # warmup: codegen and JIT on a slice
         materialize(extract_text(pages.limit(5000), "html", "text"))
         # best-of-2: the host shows random multi-second steal bursts
         # (BASELINE.md §4); one burst during the timed window would

@@ -66,10 +66,15 @@ _SENTENCE_SQL = r"([A-Z][A-Za-z0-9]*) ([a-z]+(?: [a-z]+)?) ([A-Z][A-Za-z0-9]*)\\
 
 
 def extract_triples_jvm(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whole-stage-codegen twin of :func:`extract_triples`:
-    regexp_extract_all -> explode -> group captures. Verified
-    output-identical to the pandas path (tests/test_triples_paths.py);
-    use it when the pipeline must stay JVM-only (no Python workers)."""
+    """Whole-stage-codegen twin of :func:`extract_triples`: one
+    ``regexp_extract_all`` of whole sentences, explode, then the fields
+    by string ops. A match is ``Subj pred [pred2] Obj.``, 3 or 4
+    single-space-separated tokens, so ``subj`` is the first token,
+    ``obj`` the last without its ``.``, and ``pred`` the middle tokens
+    joined by ``_``. Verified output-identical to the pandas path
+    (tests/test_triples_paths.py) and to the regex's capture groups
+    (tests/test_jvm_extraction.py); use it when the pipeline must stay
+    JVM-only (no Python workers)."""
     matches = df.select(
         "url",
         "warc_ts",
@@ -77,13 +82,14 @@ def extract_triples_jvm(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.expr(f"regexp_extract_all({text_col}, '{_SENTENCE_SQL}', 0)")
         ).alias("m"),
     )
-    pat = _SENTENCE_SQL.replace("\\\\.", "\\.")
-    return matches.select(
+    toks = matches.select("url", "warc_ts", F.split("m", " ").alias("toks"))
+    last = F.element_at("toks", -1)
+    return toks.select(
         "url",
         "warc_ts",
-        F.regexp_extract("m", pat, 1).alias("subj"),
-        F.regexp_replace(F.regexp_extract("m", pat, 2), " ", "_").alias("pred"),
-        F.regexp_extract("m", pat, 3).alias("obj"),
+        F.element_at("toks", 1).alias("subj"),
+        F.array_join(F.slice("toks", F.lit(2), F.size("toks") - 2), "_").alias("pred"),
+        last.substr(F.lit(1), F.length(last) - 1).alias("obj"),
     )
 
 

@@ -77,9 +77,10 @@ def extract_anchors(
     text, the web's naming signal for the linked page.
 
     Same narrow scan-stage shape as :func:`extract_links`: decode ->
-    two ``regexp_extract_all`` passes over the SAME let-bound html
-    string (group 1 = url, group 2 = anchor — Spark's
-    regexp_extract_all returns one group per call) -> ``arrays_zip``
+    two ``regexp_extract_all`` passes over the decoded html (group 1 =
+    url, group 2 = anchor — Spark's regexp_extract_all returns one
+    group per call, so the regex runs twice; the shared decode is left
+    to codegen's common-subexpression elimination) -> ``arrays_zip``
     -> explode. Relative nav links never match (https-only pattern).
     """
     html_str = F.col(html_col).cast("string")

@@ -131,10 +131,7 @@ def fuse_facts(
     )
     winner1 = _argmax_obj(votes1, "wvote")
 
-    totals = votes1.groupBy("subj", "pred").agg(
-        F.sum("wvote").alias("__total"),
-        F.sum("src_votes").alias("n_sources_votes"),
-    )
+    totals = votes1.groupBy("subj", "pred").agg(F.sum("wvote").alias("__total"))
     n_src = claims.groupBy("subj", "pred").agg(
         F.countDistinct("source").alias("n_sources")
     )
@@ -145,7 +142,7 @@ def fuse_facts(
             ["subj", "pred", "obj"],
             "inner",
         )
-        .join(totals.select("subj", "pred", "__total"), ["subj", "pred"], "inner")
+        .join(totals, ["subj", "pred"], "inner")
         .join(n_src, ["subj", "pred"], "inner")
     )
     return out.select(

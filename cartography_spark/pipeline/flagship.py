@@ -1,13 +1,13 @@
 """The flagship KG-construction pipeline, modular and fused forms.
 
-Modular: synthesize -> extract_text -> extract_triples as three chained
-mapInPandas stages (each independently reusable/testable).
+Modular: synthesize (Arrow stage) -> extract_text (a Catalyst
+projection, no Python worker) -> extract_triples (Arrow stage), each
+independently reusable/testable.
 
-Fused: the same three batch generators composed into ONE mapInPandas
-(functions/fuse.py) — one Python worker per task slot, one Arrow
-round-trip. On 32 pinned cores the fused form is ~4x faster than the
-chain and, unlike the chain, scales with cores (see BASELINE.md
-scaling table). Output is row-identical to the modular form
+Fused: the three Python batch generators (synthesize, the
+``extract_text_str`` oracle stage, extract_triples) composed into ONE
+mapInPandas (functions/fuse.py) — one Python worker per task slot, one
+Arrow round-trip. Output is row-identical to the modular form
 (tests/test_triples_paths.py).
 """
 
@@ -27,7 +27,7 @@ from cartography_spark.sources.pages import synthesize_pages, synthesize_pages_s
 
 def page_triples(spark: SparkSession, n: int, seed: int = 42,
                  partitions: int | None = None) -> DataFrame:
-    """Modular chain (3 Arrow stages)."""
+    """Modular chain: two Arrow stages around the JVM text extraction."""
     pages = synthesize_pages(spark, n, seed=seed, partitions=partitions)
     text = extract_text(pages.drop("text"), "html", "text")
     return extract_triples(text)

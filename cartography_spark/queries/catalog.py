@@ -979,10 +979,15 @@ def shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted index over the documents corpus: per-term document
     frequency (full) + the 16 smallest doc_ids containing the term
-    (capped ordered posting list) — the retrieval-side sink layout."""
+    (capped ordered posting list) — the retrieval-side sink layout.
+    The list is compared as its comma-joined string: an array cell is
+    unhashable in the gate's canonical sort."""
     from cartography_spark.operators.index import build_postings
 
-    return build_postings(_t(spark, sf_dir, "documents"), max_postings=16)
+    out = build_postings(_t(spark, sf_dir, "documents"), max_postings=16)
+    return out.withColumn(
+        "postings", F.array_join(F.col("postings").cast("array<string>"), ",")
+    )
 
 
 def agg_rolling_window(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1325,14 +1325,14 @@ curr AS (SELECT t.crawl_id, s.subj, s.pred, s.obj
 prevs AS (SELECT t.crawl_id, s.subj, s.pred, s.obj
           FROM trans t JOIN snaps s ON s.crawl_id = t.crawl_id - 1),
 ar AS (SELECT c.crawl_id,
-              SUM(CASE WHEN p.subj IS NULL THEN 1 ELSE 0 END) AS n_added,
-              SUM(CASE WHEN p.subj IS NOT NULL THEN 1 ELSE 0 END) AS n_retained
+              SUM(CASE WHEN p.subj IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_added,
+              SUM(CASE WHEN p.subj IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_retained
        FROM curr c LEFT JOIN prevs p
          ON p.crawl_id = c.crawl_id AND p.subj = c.subj
         AND p.pred = c.pred AND p.obj = c.obj
        GROUP BY c.crawl_id),
 rm AS (SELECT p.crawl_id,
-              SUM(CASE WHEN c.subj IS NULL THEN 1 ELSE 0 END) AS n_removed
+              SUM(CASE WHEN c.subj IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_removed
        FROM prevs p LEFT JOIN curr c
          ON c.crawl_id = p.crawl_id AND c.subj = p.subj
         AND c.pred = p.pred AND c.obj = p.obj
@@ -2236,28 +2236,28 @@ FROM agg a JOIN ex e USING (doc_id)
 # (timestamps as epoch micros so no render-format surface).
 ORACLES["profile_events"] = """
 SELECT 'event_id' AS col_name, COUNT(*) AS n_rows,
-       SUM(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS n_nulls,
+       SUM(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_nulls,
        COUNT(DISTINCT event_id) AS n_distinct,
        MIN(event_id)::DOUBLE AS min_num, MAX(event_id)::DOUBLE AS max_num,
        NULL::VARCHAR AS min_str, NULL::VARCHAR AS max_str
 FROM events
 UNION ALL
-SELECT 'ts', COUNT(*), SUM(CASE WHEN ts IS NULL THEN 1 ELSE 0 END),
+SELECT 'ts', COUNT(*), SUM(CASE WHEN ts IS NULL THEN 1 ELSE 0 END)::BIGINT,
        COUNT(DISTINCT ts),
        epoch_us(MIN(ts))::DOUBLE, epoch_us(MAX(ts))::DOUBLE, NULL, NULL
 FROM events
 UNION ALL
-SELECT 'user_id', COUNT(*), SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END),
+SELECT 'user_id', COUNT(*), SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END)::BIGINT,
        COUNT(DISTINCT user_id),
        MIN(user_id)::DOUBLE, MAX(user_id)::DOUBLE, NULL, NULL
 FROM events
 UNION ALL
-SELECT 'event_type', COUNT(*), SUM(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END),
+SELECT 'event_type', COUNT(*), SUM(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END)::BIGINT,
        COUNT(DISTINCT event_type),
        NULL::DOUBLE, NULL::DOUBLE, MIN(event_type), MAX(event_type)
 FROM events
 UNION ALL
-SELECT 'value', COUNT(*), SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END),
+SELECT 'value', COUNT(*), SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END)::BIGINT,
        COUNT(DISTINCT value),
        MIN(value), MAX(value), NULL, NULL
 FROM events
@@ -2901,9 +2901,9 @@ GROUP BY t.doc_id
 """
 
 # Inverted index: distinct (term, doc) pairs -> full df + the 16
-# smallest doc_ids as an ordered list. list() with ORDER BY inside the
-# aggregate is DuckDB's sorted collect; the cap filter runs on the
-# same ROW_NUMBER the Spark window computes.
+# smallest doc_ids as an ordered list, comma-joined like the Spark side.
+# list() with ORDER BY inside the aggregate is DuckDB's sorted collect;
+# the cap filter runs on the same ROW_NUMBER the Spark window computes.
 ORACLES["text_postings"] = """
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
@@ -2914,7 +2914,7 @@ ranked AS (
          ROW_NUMBER() OVER (PARTITION BY term ORDER BY doc_id) AS rn
   FROM pairs),
 capped AS (
-  SELECT term, list(doc_id ORDER BY doc_id) AS postings
+  SELECT term, array_to_string(list(doc_id ORDER BY doc_id), ',') AS postings
   FROM ranked WHERE rn <= 16 GROUP BY term),
 alldf AS (
   SELECT term, COUNT(*) AS df FROM pairs GROUP BY term)
@@ -2961,9 +2961,9 @@ WITH sized AS (
   FROM documents),
 scanned AS (
   SELECT doc_id, n_tokens,
-         SUM(n_tokens) OVER (ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - n_tokens AS start_offset
+         CAST(SUM(n_tokens) OVER (ORDER BY doc_id
+                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+              AS BIGINT) - n_tokens AS start_offset
   FROM sized)
 SELECT doc_id, n_tokens, start_offset,
        start_offset // 512 AS bin,

@@ -31,8 +31,9 @@ def stream_pages_to_triples(
 ) -> DataFrame:
     """readStream over a pages directory -> streaming triples frame.
 
-    Narrow transformations only (extract is a mapInPandas, triples the
-    JVM twin), so the stream needs no state until aggregated.
+    Narrow JVM-only transformations (text extraction and the triples
+    twin are both Catalyst expressions), so the stream needs no state
+    until aggregated and no Python worker.
     """
     reader = spark.readStream.schema(PAGES_SCHEMA)
     if max_files_per_trigger is not None:

@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every catalog
 query on Spark AND its DuckDB oracle at sf0.01, compare row count,
-column names, and order-insensitive values.
+column names, and order-insensitive values tagged with their column's
+type (see ``norm_cell``).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 """
@@ -10,6 +11,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from decimal import Decimal
 
 import duckdb
 
@@ -21,17 +23,64 @@ from cartography_spark.session import get_spark
 TABLES = ("region nation customer supplier part orders lineitem events documents embeddings").split()
 
 
-def norm_cell(v):
-    if isinstance(v, float):
-        return f"{v:.6g}"
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v)
+# Cells are compared as (kind, is_null, text). The kind comes from the
+# column's declared type on each engine, so an int never equals a float,
+# a Decimal/HUGEINT, or a bool. An array column raises instead: the
+# correctness gate's canonical sort cannot hash an array cell.
+_DUCK_KINDS = {
+    "BOOLEAN": "bool", "FLOAT": "float", "DOUBLE": "float", "VARCHAR": "str",
+    "DATE": "date", "BLOB": "bytes", "HUGEINT": "decimal", "UHUGEINT": "decimal",
+    **dict.fromkeys(("TINYINT", "SMALLINT", "INTEGER", "BIGINT", "UTINYINT",
+                     "USMALLINT", "UINTEGER", "UBIGINT"), "int"),
+    **dict.fromkeys(("TIMESTAMP", "TIMESTAMP WITH TIME ZONE"), "ts"),
+}
 
 
-def norm_rows(cols, rows):
+def spark_kind(dt) -> str:
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.DecimalType):
+        return "decimal"
+    for kind, types in (
+        ("bool", T.BooleanType), ("int", T.IntegralType), ("float", T.FractionalType),
+        ("str", T.StringType), ("ts", (T.TimestampType, T.TimestampNTZType)),
+        ("date", T.DateType), ("bytes", T.BinaryType), ("array", T.ArrayType),
+    ):
+        if isinstance(dt, types):
+            return kind
+    raise TypeError(f"no comparison kind for Spark type {dt.simpleString()}")
+
+
+def duck_kind(t) -> str:
+    name = str(t)
+    if name.endswith("]"):
+        return "array"
+    if name.startswith("DECIMAL"):
+        return "decimal"
+    if name not in _DUCK_KINDS:
+        raise TypeError(f"no comparison kind for DuckDB type {name}")
+    return _DUCK_KINDS[name]
+
+
+def norm_cell(v, kind: str) -> tuple[str, bool, str]:
+    if kind == "array":
+        raise TypeError("unhashable array cell: serialize it to a string")
+    if v is None:
+        return (kind, True, "")
+    if kind == "float":
+        # The correctness gate's float rule is not in this repo, so floats
+        # keep the lenient %.6g rendering; only the kind is strict.
+        return (kind, False, f"{v:.6g}")
+    if kind == "decimal":
+        return (kind, False, format(Decimal(v).normalize(), "f"))
+    if kind == "bytes":
+        return (kind, False, bytes(v).hex())
+    return (kind, False, str(v))
+
+
+def norm_rows(cols, kinds, rows):
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(norm_cell(r[i]) for i in idx) for r in rows)
+    return sorted(tuple(norm_cell(r[i], kinds[i]) for i in idx) for r in rows)
 
 
 def main():
@@ -94,6 +143,7 @@ def main():
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
+            s_kinds = [spark_kind(f.dataType) for f in sdf.schema.fields]
             s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             failures.append(name)
@@ -106,6 +156,7 @@ def main():
         try:
             rel = con.sql(sql)
             d_cols = [c for c in rel.columns]
+            d_kinds = [duck_kind(t) for t in rel.types]
             d_rows = rel.fetchall()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
@@ -119,13 +170,19 @@ def main():
             ok = False
             print(f"FAIL  {name}: rowcount spark={len(s_rows)} duck={len(d_rows)}")
         else:
-            a = norm_rows(s_cols, s_rows)
-            b = norm_rows(d_cols, d_rows)
-            if a != b:
+            try:
+                a = norm_rows(s_cols, s_kinds, s_rows)
+                b = norm_rows(d_cols, d_kinds, d_rows)
+            except TypeError as e:
                 ok = False
-                diff_a = [r for r in a if r not in set(map(tuple, b))][:3]
-                diff_b = [r for r in b if r not in set(map(tuple, a))][:3]
-                print(f"FAIL  {name}: value mismatch; spark-only={diff_a} duck-only={diff_b}")
+                print(f"FAIL  {name}: {e}")
+            else:
+                if a != b:
+                    ok = False
+                    diff_a = [r for r in a if r not in set(map(tuple, b))][:3]
+                    diff_b = [r for r in b if r not in set(map(tuple, a))][:3]
+                    print(f"FAIL  {name}: value mismatch; "
+                          f"spark-only={diff_a} duck-only={diff_b}")
         if ok:
             print(f"OK    {name}: {len(s_rows)} rows [{time.time()-t0:.1f}s]")
         else:
