@@ -177,8 +177,12 @@ def bpe_merge_rules(
 def bpe_segment(vocab: DataFrame, rules: DataFrame) -> DataFrame:
     """Apply learned rules (in merge_rank order) to a (word, freq,
     syms) frame — the encode side. Rules are collected to the driver
-    (k rows, k is tokenizer-sized: tens of thousands at most) and
-    applied as k chained row-local folds.
+    (k rows) and applied as k chained row-local folds, checkpointed
+    every 4 rules. The cost is per rule, not per row: 32 rules over a
+    300-word vocab ran 43 Spark jobs in 12.6 s on local[2], about 1.3
+    jobs and 0.4 s per rule. k in the hundreds is practical; a
+    tokenizer-sized k (tens of thousands of rules) would run for hours
+    and needs a single-pass encoder instead.
     """
     ordered = sorted(
         rules.select("merge_rank", "left", "right", "pair_count").collect(),

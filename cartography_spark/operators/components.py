@@ -14,9 +14,14 @@ link job (N2, ``cartography/data/jobs/analysis/gsuite_human_link.json``)
 linking to transitive closure.
 
 Scale notes:
-- ``localCheckpoint`` every iteration truncates the logical plan (an
-  iterative join otherwise compounds lineage exponentially);
-- convergence check is a cheap count of changed labels;
+- the rounds run on the ``fixpoint`` driver (``operators/fixpoint.py``):
+  ``localCheckpoint`` every round truncates the logical plan (an
+  iterative join otherwise compounds lineage exponentially), and the
+  convergence probe — the count of rows whose label changed this round —
+  is an Observation on that same checkpoint job, so it costs no job of
+  its own;
+- ``max_iter`` is a safety cap: a graph still changing after it raises
+  ``RuntimeError`` instead of returning unconverged labels;
 - giant-component skew: the min-id label becomes a hot key; the
   groupBy(min) is a partial aggregation (map-side combine) so the hot
   key reduces to one row per partition before the shuffle.
@@ -25,6 +30,8 @@ Scale notes:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from cartography_spark.operators.fixpoint import PENDING, fixpoint
 
 
 def connected_components(
@@ -37,9 +44,10 @@ def connected_components(
 
     ``edges`` is undirected input (each edge counted both ways
     internally). Isolated nodes need no rows here — every node present
-    in edges gets a label.
+    in edges gets a label. Raises ``RuntimeError`` when labels still
+    change after ``max_iter`` rounds (O(log n) rounds suffice on real
+    graphs).
     """
-    spark = edges.sparkSession
     # sym is referenced by EVERY iteration's neighbor-min join — without
     # a checkpoint each round re-executes the full upstream plan that
     # produced the edges (e.g. the LSH blocking pipeline: measured 5x
@@ -55,57 +63,38 @@ def connected_components(
     labels = (
         sym.groupBy("a")
         .agg(F.least(F.min("b"), F.first("a")).alias("comp"))
-        .select(F.col("a").alias("id"), F.least(F.col("comp"), F.col("a")).alias("comp"))
-        .localCheckpoint()
+        .select(
+            F.col("a").alias("id"),
+            F.least(F.col("comp"), F.col("a")).alias("comp"),
+            F.lit(True).alias(PENDING),
+        )
     )
-    from pyspark.sql import Observation
 
-    prev_sum = None
-    for it in range(max_iter):
+    def step(state: DataFrame) -> DataFrame:
         # (1) neighbor-min: comp(v) <- min(comp(v), min over neighbors)
         nbr = (
-            sym.join(labels.withColumnRenamed("id", "b"), "b")
+            sym.join(state.select(F.col("id").alias("b"), "comp"), "b")
             .groupBy("a")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        stepped = labels.join(nbr.withColumnRenamed("a", "id"), "id", "left").select(
+        stepped = state.join(nbr.withColumnRenamed("a", "id"), "id", "left").select(
             "id",
             F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))).alias("comp"),
+            F.col("comp").alias("__prev"),
         )
         # (2) pointer-jump (doubling): comp(v) <- comp(comp(v)); combined
         # with (1) this converges in O(log n) rounds on long chains,
-        # where neighbor-min alone needs O(diameter).
-        # Convergence metric rides the checkpoint materialization via
-        # Observation (no separate aggregate job per round): per-row
-        # labels only ever decrease, so the label multiset changes iff
-        # any row changed; compare an exact decimal sum of per-row label
-        # hashes (type-agnostic, overflow-free).
-        obs = Observation(f"cc_round_{it}")
-        jumped = (
-            stepped.alias("x")
-            .join(
-                stepped.select(
-                    F.col("id").alias("comp"), F.col("comp").alias("root")
-                ).alias("y"),
-                "comp",
-                "left",
-            )
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce(F.col("root"), F.col("comp"))).alias("comp"),
-            )
-            .observe(
-                obs,
-                F.sum(F.xxhash64(F.col("id"), F.col("comp")).cast("decimal(38,0)")).alias("s"),
-            )
-            .localCheckpoint()
-        )
-        new_sum = obs.get["s"]
-        labels = jumped
-        if prev_sum is not None and new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels.select("id", F.col("comp").alias("component"))
+        # where neighbor-min alone needs O(diameter). Labels only ever
+        # decrease, so a row changed iff its label dropped.
+        jumped = F.least(F.col("comp"), F.coalesce(F.col("root"), F.col("comp")))
+        return stepped.join(
+            stepped.select(F.col("id").alias("comp"), F.col("comp").alias("root")),
+            "comp",
+            "left",
+        ).select("id", jumped.alias("comp"), (jumped < F.col("__prev")).alias(PENDING))
+
+    out = fixpoint(labels, step, "connected_components", cap=max_iter)
+    return out.select("id", F.col("comp").alias("component"))
 
 
 def group_star_edges(

@@ -11,8 +11,12 @@ Reference: ``cartography/data/jobs/analysis/aws_ec2_asset_exposure.json``
 (recursive image ancestry).
 
 Scale: each hop is one shuffle equi-join on dst=src; frontier
-``distinct()`` bounds growth; ``localCheckpoint`` truncates lineage in
-the fixpoint loop. Hot hub nodes are AQE-skew-split.
+``distinct()`` bounds growth. ``reach_fixpoint`` is the package's one
+BFS: it runs on the ``fixpoint`` driver (``operators/fixpoint.py``), so
+each round's visited set is ``localCheckpoint``-ed with the frontier
+size observed by that same job (no separate emptiness probe), and its
+``max_iter`` is a safety cap that raises rather than returning a
+truncated set. Hot hub nodes are AQE-skew-split.
 """
 
 from __future__ import annotations
@@ -20,6 +24,8 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
+
+from cartography_spark.operators.fixpoint import PENDING, fixpoint
 
 
 def hop(
@@ -67,26 +73,24 @@ def reach_fixpoint(
     max_iter: int = 30,
 ) -> DataFrame:
     """Unbounded reachability ``[*1..]`` to fixpoint (ancestor chains).
-    Iterates hops until the visited set stops growing. A seed node IS
-    returned when it is reachable from a seed in >=1 hop (cycles,
-    ``a->b->a``) — matching Cypher ``[*1..]`` — tracked separately from
-    the frontier dedup set so cycle re-entries count as reached without
-    re-expanding already-expanded nodes."""
-    seeds_d = seeds.select(node_col).distinct().localCheckpoint()
-    visited = seeds_d
-    frontier = seeds_d
-    # seed nodes re-found in >=1 hop (small: bounded by |seeds|)
-    seed_hits = seeds_d.limit(0)
-    for _ in range(max_iter):
-        nxt = hop(frontier, edges, rel_labels, node_col)
-        seed_hits = seed_hits.union(nxt.join(seeds_d, node_col, "left_semi"))
-        new = nxt.join(visited, node_col, "left_anti").localCheckpoint()
-        if new.limit(1).count() == 0:
-            break
-        visited = visited.union(new).localCheckpoint()
-        frontier = new
-    return (
-        visited.join(seeds_d, node_col, "left_anti").union(seed_hits).distinct()
+    A seed node IS returned when it is reachable from a seed in >=1 hop
+    (cycles, ``a->b->a``) — matching Cypher ``[*1..]``: the BFS starts
+    from the seeds' one-hop successors, so a seed is visited only when
+    a path leads back to it. Each round expands the last round's newly
+    visited nodes and merges the unseen ones into the visited set.
+    Raises ``RuntimeError`` when nodes are still being discovered after
+    ``max_iter`` rounds."""
+
+    def step(visited: DataFrame) -> DataFrame:
+        nxt = hop(visited.where(F.col(PENDING)), edges, rel_labels, node_col)
+        # New nodes come only from nxt, so their PENDING is NULL.
+        return visited.join(nxt, node_col, "full_outer").select(
+            node_col, F.col(PENDING).isNull().alias(PENDING)
+        )
+
+    start = hop(seeds.select(node_col).distinct(), edges, rel_labels, node_col)
+    return fixpoint(
+        start.withColumn(PENDING, F.lit(True)), step, "reach_fixpoint", cap=max_iter
     )
 
 

@@ -36,11 +36,27 @@ Scale design (both operators):
   10^14 pairs at that one reducer; the oriented join never centers a
   wedge on a hub. All steps are equi-joins + aggregations (AQE can
   further split any residual skew).
+- **Convergence loops** (k-core peeling, shortest paths, SCC coloring,
+  DAG levels, MIS) all run on the one bounded driver in
+  ``fixpoint.py``: the state frame carries a boolean pending column,
+  each round's state is ``localCheckpoint``-ed with an Observation that
+  counts the pending rows in that same job (no separate emptiness
+  probe), and the loop ends when none are pending. Shortest paths, the
+  SCC coloring and DAG levels share one frontier relaxation
+  (``_relax``; min vs max is their only difference), and the bowtie's
+  BFS is ``graphquery.reach_fixpoint``. Result-defining caps
+  (``shortest_paths(rounds)``, ``k_core(max_rounds)``) stop quietly;
+  every other loop raises ``RuntimeError`` at a safety cap derived
+  from its input (initial row count + 1). The fixed-iteration loops
+  (PageRank, HITS, label propagation, HyperBall) keep a plain ``for``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from cartography_spark.operators.fixpoint import PENDING, checkpoint, fixpoint
+from cartography_spark.operators.graphquery import reach_fixpoint
 
 
 def pagerank(
@@ -48,7 +64,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iterations: int = 5,
-    checkpoint_every: int = 1,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over directed ``edges(src, dst)``.
@@ -74,7 +89,7 @@ def pagerank(
     successive deltas the way ``components.py`` does.
     """
     return _pagerank_impl(
-        nodes, edges, damping, iterations, checkpoint_every, weight_col, reset=None
+        nodes, edges, damping, iterations, weight_col, reset=None
     )
 
 
@@ -84,7 +99,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     damping: float = 0.85,
     iterations: int = 5,
-    checkpoint_every: int = 1,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank: the teleport distribution concentrates on
@@ -100,7 +114,7 @@ def personalized_pagerank(
     1-row aggregate). Initial rank = p, the standard PPR start.
     """
     return _pagerank_impl(
-        nodes, edges, damping, iterations, checkpoint_every, weight_col, reset=seeds
+        nodes, edges, damping, iterations, weight_col, reset=seeds
     )
 
 
@@ -109,7 +123,6 @@ def _pagerank_impl(
     edges: DataFrame,
     damping: float,
     iterations: int,
-    checkpoint_every: int,
     weight_col: str | None,
     reset: DataFrame | None,
 ) -> DataFrame:
@@ -162,7 +175,7 @@ def _pagerank_impl(
 
     base = (1.0 - damping) / n_seeds  # uniform: /N; personalized: (1-d)/|S| on seeds
 
-    for it in range(iterations):
+    for _ in range(iterations):
         contrib = (
             ranks.join(edges_w, ranks["id"] == edges_w["src"])
             .groupBy(F.col("dst").alias("id"))
@@ -193,8 +206,7 @@ def _pagerank_impl(
                 F.coalesce(F.col("contrib"), F.lit(0.0))
                 + F.col("dang_mass") * p
             )
-        stepped = joined.select("id", new_rank.alias("pagerank"))
-        ranks = stepped.localCheckpoint() if (it + 1) % checkpoint_every == 0 else stepped
+        ranks = joined.select("id", new_rank.alias("pagerank")).localCheckpoint()
     return ranks
 
 
@@ -322,37 +334,45 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
 def k_core(edges: DataFrame, k: int, max_rounds: int | None = None) -> DataFrame:
     """The k-core of the undirected graph of ``edges(src, dst)``:
     repeatedly peel every node of degree < k until none remain (the
-    standard distributed formulation — each round is one degree
-    aggregate plus two anti-joins, with per-round localCheckpoint
-    lineage truncation exactly like ``components.py``). Returns
-    ``(id, deg)`` for surviving nodes, ``deg`` their degree INSIDE the
-    core subgraph.
+    standard distributed formulation). Returns ``(id, deg)`` for
+    surviving nodes, ``deg`` their degree INSIDE the core subgraph.
 
     Dense-subgraph extraction is the graph-side curation gate (spam
     rings and boilerplate co-occurrence blocks live in high cores;
-    low-core fringe is the long tail). Round count is bounded by the
-    degeneracy ordering depth — small on web-ish graphs, O(n) only on
-    pathological paths; ``max_rounds`` caps it deterministically, which
-    is also what makes the unrolled-SQL oracle twin expressible (both
-    sides run exactly R rounds, so the gate compares bit-for-bit even
-    before convergence).
+    low-core fringe is the long tail). The loop runs on the
+    ``fixpoint`` driver over the edge set: each edge is flagged pending
+    when it touches a node of degree < k, and a round drops the flagged
+    edges and re-flags the rest (one degree aggregate plus two
+    membership joins, checkpointed with the pending count observed in
+    the same job). Round count is bounded by the degeneracy ordering
+    depth — small on web-ish graphs, O(n) only on pathological paths.
+    ``max_rounds`` caps the number of peels and defines the result
+    when reached (no error), which is also what makes the unrolled-SQL
+    oracle twin expressible (both sides run exactly R rounds, so the
+    gate compares bit-for-bit even before convergence). Without it the
+    safety cap is the edge count + 1 (every round drops >= 1 edge).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    und = _canonical_undirected(edges).localCheckpoint()
-    rounds = 0
-    while max_rounds is None or rounds < max_rounds:
-        deg = _degrees(und)
-        low = deg.where(F.col("deg") < k).select("id").localCheckpoint()
-        if low.isEmpty():
-            break
-        und = (
-            und.join(low, und["lo"] == low["id"], "left_anti")
-            .join(low, und["hi"] == low["id"], "left_anti")
-            .localCheckpoint()
+
+    def flag_low(und: DataFrame) -> DataFrame:
+        low = _degrees(und).where(F.col("deg") < k)
+        lo = low.select(F.col("id").alias("lo"), F.lit(True).alias("__lo_low"))
+        hi = low.select(F.col("id").alias("hi"), F.lit(True).alias("__hi_low"))
+        return und.join(lo, "lo", "left").join(hi, "hi", "left").select(
+            "lo",
+            "hi",
+            (F.col("__lo_low").isNotNull() | F.col("__hi_low").isNotNull()).alias(PENDING),
         )
-        rounds += 1
-    return _degrees(und)
+
+    core = fixpoint(
+        flag_low(_canonical_undirected(edges)),
+        lambda s: flag_low(s.where(~F.col(PENDING)).select("lo", "hi")),
+        "k_core",
+        cap=max_rounds,
+        quiet=max_rounds is not None,
+    )
+    return _degrees(core)
 
 
 def shortest_paths(
@@ -376,19 +396,20 @@ def shortest_paths(
     seed set is the quantitative form (how far is each entity from the
     trust boundary / a seed domain).
 
-    Scale shape — frontier Bellman-Ford, not full relaxation: each
-    round joins only the nodes whose distance IMPROVED last round
-    against the staged edge list, takes a map-side-combined ``min`` per
-    destination, and merges into the running distance frame; lineage is
-    truncated per round (``localCheckpoint``) like every iterative
-    operator here. On web-ish graphs the frontier shrinks geometrically
-    after the first hops, so late rounds cost ~nothing, while the
-    result after round i is EXACTLY "min cost over paths with <= i
-    edges" — the full-relaxation semantics the unrolled SQL oracle twin
-    computes — because a node relaxes its out-edges in the round after
-    any improvement and never needs to otherwise. Early exit on an
-    empty frontier is therefore observationally identical to running
-    all ``rounds``.
+    Scale shape — frontier Bellman-Ford, not full relaxation (the
+    shared ``_relax``): each round joins only the nodes whose distance
+    IMPROVED last round against the staged edge list, takes a
+    map-side-combined ``min`` per destination, and merges into the
+    running distance frame, checkpointed per round with the improved
+    count observed in the same job. On web-ish graphs the frontier
+    shrinks geometrically after the first hops, so late rounds cost
+    ~nothing, while the result after round i is EXACTLY "min cost over
+    paths with <= i edges" — the full-relaxation semantics the unrolled
+    SQL oracle twin computes — because a node relaxes its out-edges in
+    the round after any improvement and never needs to otherwise.
+    Stopping on an empty frontier is therefore observationally
+    identical to running all ``rounds``; ``rounds`` itself defines the
+    result and never raises.
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
@@ -404,31 +425,55 @@ def shortest_paths(
         w = F.col(weight_col).cast("double")
         zero = F.lit(0.0)
     e = edges.select("src", "dst", w.alias("w")).localCheckpoint()
-    dist = seed_ids.select("id", zero.alias("dist")).localCheckpoint()
-    frontier = dist
-    for _ in range(rounds):
-        if frontier.isEmpty():
-            break
+    return _relax(
+        seed_ids.select("id", zero.alias("dist")),
+        e,
+        "dist",
+        minimize=True,
+        name="shortest_paths",
+        cap=rounds,
+        quiet=True,
+    )
+
+
+def _relax(
+    start: DataFrame,
+    edges: DataFrame,
+    col: str,
+    minimize: bool,
+    name: str,
+    cap: int | None = None,
+    quiet: bool = False,
+) -> DataFrame:
+    """The frontier relaxation shared by ``shortest_paths``, the SCC
+    coloring and ``dag_levels``: values in ``start(id, <col>)`` flow
+    along ``edges(src, dst[, w])`` (adding ``w`` when the edge frame
+    has it) and every node keeps the min (``minimize``) or max of what
+    reaches it; a node enters the state on first reach. Per round only
+    the nodes improved last round propagate: one equi-join, one
+    map-side-combined min/max per destination, one full-outer merge,
+    run on the ``fixpoint`` driver (``cap=None``: the safety cap of
+    ``start``'s row count + 1, enough for any acyclic propagation over
+    those nodes). Returns ``(id, <col>)``."""
+    hop = F.col(col) + F.col("w") if "w" in edges.columns else F.col(col)
+    pick, best = (F.min, F.least) if minimize else (F.max, F.greatest)
+
+    def step(state: DataFrame) -> DataFrame:
+        front = state.where(F.col(PENDING))
         cand = (
-            frontier.join(e, frontier["id"] == e["src"])
+            front.join(edges, front["id"] == edges["src"])
             .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
+            .agg(pick(hop).alias("__cand"))
         )
-        merged = (
-            dist.join(cand, "id", "full_outer")
-            .select(
-                "id",
-                F.least(F.col("dist"), F.col("cand")).alias("dist"),
-                # improved = first reach, or a strictly smaller cost.
-                (F.col("dist").isNull() | (F.col("cand") < F.col("dist"))).alias(
-                    "__improved"
-                ),
-            )
-            .localCheckpoint()
+        better = F.col("__cand") < F.col(col) if minimize else F.col("__cand") > F.col(col)
+        return state.join(cand, "id", "full_outer").select(
+            "id",
+            best(col, "__cand").alias(col),
+            # improved = first reach, or a strictly better value.
+            (F.col("__cand").isNotNull() & (F.col(col).isNull() | better)).alias(PENDING),
         )
-        frontier = merged.where(F.col("__improved")).select("id", "dist")
-        dist = merged.select("id", "dist")
-    return dist
+
+    return fixpoint(start.withColumn(PENDING, F.lit(True)), step, name, cap, quiet)
 
 
 def label_propagation(
@@ -725,38 +770,6 @@ def _triangles_from_und(und: DataFrame) -> DataFrame:
     return corners.groupBy("id").agg(F.count("*").alias("triangles"))
 
 
-def _min_reach_fixpoint(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """``(id, lbl)``: the minimum node id reachable FROM ``id`` along
-    directed ``edges(src, dst)`` (including ``id`` itself), computed as
-    a frontier min-label fixpoint — labels flow backwards along edges
-    (a node adopts the min of its successors' labels), and per round
-    only last-round-improved nodes re-propagate, exactly the
-    ``shortest_paths`` frontier discipline. Each round is one equi-join
-    + one map-side-combined ``min`` + a full-outer merge; lineage is
-    truncated per round. Round count is bounded by the longest shortest
-    path to each node's eventual minimum — O(diameter), not O(n)."""
-    labels = nodes.select("id", F.col("id").alias("lbl")).localCheckpoint()
-    frontier = labels
-    while not frontier.isEmpty():
-        cand = (
-            frontier.join(edges, frontier["id"] == edges["dst"])
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("lbl").alias("cand"))
-        )
-        merged = (
-            labels.join(cand, "id", "left")
-            .select(
-                "id",
-                F.least("lbl", "cand").alias("lbl"),
-                (F.col("cand") < F.col("lbl")).alias("__improved"),
-            )
-            .localCheckpoint()
-        )
-        frontier = merged.where(F.col("__improved")).select("id", "lbl")
-        labels = merged.select("id", "lbl")
-    return labels
-
-
 def strongly_connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Exact SCCs of the directed graph ``edges(src, dst)`` over
     ``nodes(id)``: returns ``(id, scc)`` where ``scc`` is the minimum
@@ -769,72 +782,56 @@ def strongly_connected_components(nodes: DataFrame, edges: DataFrame) -> DataFra
     Pregel-style SCC of Salihoglu & Widom, VLDB'14, with min-id
     colors). Per outer round, over the still-unassigned subgraph:
     ``f(v)`` = min id reachable from v, ``b(v)`` = min id that reaches
-    v (the same fixpoint on reversed edges). ``f(v) == b(v) == c``
-    proves v and c mutually reachable, so every such v joins SCC ``c``;
-    assigned nodes (and their edges) drop out and the round repeats.
-    The subgraph minimum always satisfies the test, so >= 1 whole SCC
-    retires per round — in practice a web/host graph condenses in a
-    few rounds (one giant core + shallow periphery); a pathological
-    SCC-chain degrades to O(#SCCs) rounds, the documented tradeoff of
-    the coloring scheme. Every step is an equi-join or a partial
-    aggregation; nothing is collected.
+    v (both the shared ``_relax`` min-relaxation, on reversed and
+    forward edges; each converges in O(diameter) rounds). ``f(v) ==
+    b(v) == c`` proves v and c mutually reachable, so every such v
+    joins SCC ``c``; assigned nodes (and their edges) drop out and the
+    round repeats. The subgraph minimum always satisfies the test, so
+    >= 1 whole SCC retires per round — in practice a web/host graph
+    condenses in a few rounds (one giant core + shallow periphery); a
+    pathological SCC-chain degrades to O(#SCCs) rounds, the documented
+    tradeoff of the coloring scheme. Both loops run on the ``fixpoint``
+    driver with the derived safety cap (node count + 1), so no round
+    pays a separate emptiness probe. Every step is an equi-join or a
+    partial aggregation; nothing is collected.
 
     Reference analog: the reference's exposure analyses walk directed
     reachability between asset classes (``cartography/data/jobs/
     analysis/*.json``); mutual-reachability classes are the closure of
     that idea over the whole graph.
     """
-    active_nodes = nodes.select("id").distinct().localCheckpoint()
-    active_edges = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    out: DataFrame | None = None
-    while not active_nodes.isEmpty():
-        fwd = _min_reach_fixpoint(active_nodes, active_edges)
-        rev = active_edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
+    ids = nodes.select("id").distinct()
+    live = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+
+    def peel(state: DataFrame) -> DataFrame:
+        nonlocal live
+        active = state.where(F.col(PENDING)).select("id")
+        live = (
+            live.join(active.withColumnRenamed("id", "src"), "src", "left_semi")
+            .join(active.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            .localCheckpoint()
         )
-        bwd = _min_reach_fixpoint(active_nodes, rev).withColumnRenamed("lbl", "blbl")
-        both = fwd.join(bwd, "id")
+        rev = live.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        start = active.select("id", F.col("id").alias("lbl"))
+        fwd = _relax(start, rev, "lbl", minimize=True, name="strongly_connected_components")
+        bwd = _relax(start, live, "lbl", minimize=True, name="strongly_connected_components")
         done = (
-            both.where(F.col("lbl") == F.col("blbl"))
-            .select("id", F.col("lbl").alias("scc"))
-            .localCheckpoint()
+            fwd.join(bwd.withColumnRenamed("lbl", "blbl"), "id")
+            .where(F.col("lbl") == F.col("blbl"))
+            .select("id", F.col("lbl").alias("__new"))
         )
-        out = done if out is None else out.unionAll(done).localCheckpoint()
-        active_nodes = active_nodes.join(done, "id", "left_anti").localCheckpoint()
-        done_ids = done.select("id")
-        active_edges = (
-            active_edges.join(done_ids, active_edges["src"] == done_ids["id"], "left_anti")
-            .join(done_ids, active_edges["dst"] == done_ids["id"], "left_anti")
-            .localCheckpoint()
+        return state.join(done, "id", "left").select(
+            "id",
+            F.coalesce("scc", "__new").alias("scc"),
+            (F.col("scc").isNull() & F.col("__new").isNull()).alias(PENDING),
         )
-    if out is None:
-        return nodes.select("id", F.col("id").alias("scc")).where(F.lit(False))
-    return out
 
-
-def _reachable_from(seed_ids: DataFrame, edges: DataFrame) -> DataFrame:
-    """``(id)``: every node reachable from ``seed_ids(id)`` along
-    directed ``edges(src, dst)``, seeds included — frontier BFS with
-    per-round lineage truncation and early exit (the set-semantics
-    specialization of ``shortest_paths``)."""
-    seen = seed_ids.select("id").distinct().localCheckpoint()
-    frontier = seen
-    while not frontier.isEmpty():
-        nxt = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(seen, "id", "left_anti")
-            .localCheckpoint()
-        )
-        seen = seen.unionAll(nxt).localCheckpoint()
-        frontier = nxt
-    return seen
+    start = ids.select(
+        "id",
+        F.lit(None).cast(ids.schema["id"].dataType).alias("scc"),
+        F.lit(True).alias(PENDING),
+    )
+    return fixpoint(start, peel, "strongly_connected_components")
 
 
 def bowtie_regions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -853,9 +850,11 @@ def bowtie_regions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     host graph it tells a crawl scheduler which domains feed discovery
     (IN), which are sinks (OUT), and which islands need seeding. Cost:
     one SCC run + a 1-row top-1 aggregate (the only collect) + two
-    frontier BFS sweeps + broadcast-able membership joins.
+    ``reach_fixpoint`` BFS sweeps from the core (capped at the edge
+    count + 1, which no BFS over those edges can exceed) +
+    broadcast-able membership joins.
     """
-    scc = strongly_connected_components(nodes, edges).localCheckpoint()
+    scc = strongly_connected_components(nodes, edges)
     top = (
         scc.groupBy("scc")
         .agg(F.count("*").alias("n"))
@@ -865,18 +864,21 @@ def bowtie_regions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     )
     if not top:
         return nodes.select("id", F.lit("OTHER").alias("region")).where(F.lit(False))
-    core_id = top[0]["scc"]
-    core = scc.where(F.col("scc") == F.lit(core_id)).select("id").localCheckpoint()
-    e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    e = e.localCheckpoint()
+    core = scc.where(F.col("scc") == F.lit(top[0]["scc"])).select("id")
+    e, n_edges, _ = checkpoint(
+        edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+    )
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    out_set = _reachable_from(core, e).withColumnRenamed("id", "oid")
-    in_set = _reachable_from(core, rev).withColumnRenamed("id", "iid")
-    all_nodes = nodes.select("id").distinct()
+    # [*1..] reachability: whether the core re-reaches itself does not
+    # matter, since CORE is tested first below.
+    out_set = reach_fixpoint(core, e, node_col="id", max_iter=n_edges + 1)
+    in_set = reach_fixpoint(core, rev, node_col="id", max_iter=n_edges + 1)
     return (
-        all_nodes.join(core.withColumn("__core", F.lit(1)), "id", "left")
-        .join(in_set.withColumn("__in", F.lit(1)), all_nodes["id"] == in_set["iid"], "left")
-        .join(out_set.withColumn("__out", F.lit(1)), all_nodes["id"] == out_set["oid"], "left")
+        nodes.select("id")
+        .distinct()
+        .join(core.withColumn("__core", F.lit(1)), "id", "left")
+        .join(in_set.withColumn("__in", F.lit(1)), "id", "left")
+        .join(out_set.withColumn("__out", F.lit(1)), "id", "left")
         .select(
             "id",
             F.when(F.col("__core").isNotNull(), F.lit("CORE"))
@@ -917,32 +919,21 @@ def dag_levels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     predecessors. The topological layering of an SCC condensation:
     level k components can only be written after every level < k
     upstream component, so it IS the dependency schedule of a staged
-    graph build. Frontier fixpoint like ``_min_reach_fixpoint`` but
-    maximizing: per round one equi-join + a map-side-combined max,
-    only last-round-raised nodes re-propagate; rounds = DAG depth.
-    Precondition: ``edges`` is acyclic (a cycle never converges) —
-    feed it ``condensation`` output, which is acyclic by construction.
+    graph build. The shared ``_relax`` frontier relaxation, maximizing:
+    per round one equi-join + a map-side-combined max, only
+    last-round-raised nodes re-propagate; rounds = DAG depth.
+    Precondition: ``edges`` is acyclic — feed it ``condensation``
+    output, which is acyclic by construction. A cycle never converges,
+    so it raises ``RuntimeError`` at the safety cap (node count + 1
+    rounds; a DAG over n nodes needs at most n).
     """
-    levels = nodes.select("id", F.lit(0).alias("level")).localCheckpoint()
-    frontier = levels
-    while not frontier.isEmpty():
-        cand = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg((F.max("level") + F.lit(1)).alias("cand"))
-        )
-        merged = (
-            levels.join(cand, "id", "left")
-            .select(
-                "id",
-                F.greatest("level", "cand").alias("level"),
-                (F.col("cand") > F.col("level")).alias("__raised"),
-            )
-            .localCheckpoint()
-        )
-        frontier = merged.where(F.col("__raised")).select("id", "level")
-        levels = merged.select("id", "level")
-    return levels
+    return _relax(
+        nodes.select("id", F.lit(0).alias("level")),
+        edges.select("src", "dst", F.lit(1).alias("w")),
+        "level",
+        minimize=False,
+        name="dag_levels",
+    )
 
 
 def maximal_independent_set(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -968,9 +959,13 @@ def maximal_independent_set(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     component dedup keeps one doc per transitively-closed cluster —
     over-merging under chained similarity; MIS over the pair graph
     keeps a MAXIMAL set of mutually non-duplicate docs, strictly more
-    data at the same pairwise-novelty bar. Per round: one equi-join +
-    a map-side-combined struct-min + two anti-joins, lineage
-    truncated; nothing data-proportional is collected.
+    data at the same pairwise-novelty bar. Rounds run on the
+    ``fixpoint`` driver over the node frame (pending = not yet decided;
+    safety cap node count + 1, as every round decides >= 1 node). Per
+    round: one equi-join + a map-side-combined struct-min over the
+    active neighbors, one join for the winners' neighbors, and a merge
+    into the node frame, checkpointed; nothing data-proportional is
+    collected.
     """
     und = (
         edges.select("src", "dst")
@@ -982,9 +977,9 @@ def maximal_independent_set(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    active = nodes.select("id", "pri").localCheckpoint()
-    kept: DataFrame | None = None
-    while not active.isEmpty():
+
+    def step(state: DataFrame) -> DataFrame:
+        active = state.where(F.col(PENDING)).select("id", "pri")
         nbr = (
             und.join(
                 active.select(F.col("id").alias("dst"), F.col("pri").alias("dpri")),
@@ -993,33 +988,27 @@ def maximal_independent_set(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             .groupBy("src")
             .agg(F.min(F.struct(F.col("dpri"), F.col("dst"))).alias("mn"))
         )
-        w = (
+        win = (
             active.join(nbr, active["id"] == nbr["src"], "left")
             .where(
                 F.col("mn").isNull()
                 | (F.struct(F.col("pri"), F.col("id")) < F.col("mn"))
             )
-            .select("id")
-            .localCheckpoint()
+            .select("id", F.lit(True).alias("__win"))
         )
-        kept = w if kept is None else kept.unionAll(w).localCheckpoint()
-        losers = (
-            und.join(w.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
+        lose = (
+            und.join(win.withColumnRenamed("id", "src"), "src")
+            .select(F.col("dst").alias("id"), F.lit(False).alias("__win"))
             .distinct()
         )
-        removed = w.unionAll(losers).distinct().localCheckpoint()
-        active = active.join(removed, "id", "left_anti").localCheckpoint()
-        rem_src = removed.withColumnRenamed("id", "src")
-        rem_dst = removed.withColumnRenamed("id", "dst")
-        und = (
-            und.join(rem_src, "src", "left_anti")
-            .join(rem_dst, "dst", "left_anti")
-            .select("src", "dst")
-            .localCheckpoint()
+        # A winner's neighbors are active or already retired, never
+        # kept, so coalesce only ever decides undecided nodes.
+        kept = F.coalesce("kept", "__win")
+        return state.join(win.unionAll(lose), "id", "left").select(
+            "id", "pri", kept.alias("kept"), kept.isNull().alias(PENDING)
         )
-    if kept is None:
-        return nodes.select("id", F.lit(False).alias("kept")).where(F.lit(False))
-    return nodes.select("id").join(
-        kept.withColumn("kept", F.lit(True)), "id", "left"
-    ).select("id", F.coalesce("kept", F.lit(False)).alias("kept"))
+
+    start = nodes.select(
+        "id", "pri", F.lit(None).cast("boolean").alias("kept"), F.lit(True).alias(PENDING)
+    )
+    return fixpoint(start, step, "maximal_independent_set").select("id", "kept")

@@ -24,6 +24,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from cartography_spark.operators.fixpoint import PENDING, fixpoint
+
 
 def resolve_redirects(redirects: DataFrame, max_chain_len: int = 64) -> DataFrame:
     """Resolve every redirect source to its terminal destination.
@@ -44,36 +46,37 @@ def resolve_redirects(redirects: DataFrame, max_chain_len: int = 64) -> DataFram
 
     Each round is ONE equi-join of the redirect table with itself
     (shuffle bounded by the redirect-map size, never the corpus) plus
-    a lineage-truncating localCheckpoint; rounds =
-    ceil(log2(max_chain_len)) + 1 with early exit once every pointer
-    is terminal, so an acyclic map of longest chain L costs
-    ~log2(L) shuffles. Hops accumulate exactly through the doubling
-    (composed pointer adds the two segment lengths), so the output is
-    bit-deterministic at any parallelism.
+    a lineage-truncating localCheckpoint, run on the ``fixpoint``
+    driver: a pointer is pending when the composing join moved it, and
+    that count is observed by the checkpoint job itself. Rounds are
+    capped at ceil(log2(max_chain_len)) + 1 — a result-defining cap
+    (chains still moving at the cap are reported as cycles, not
+    raised) — and stop early once no pointer moves, so an acyclic map
+    of longest chain L costs ~log2(L) + 1 shuffles. Hops accumulate
+    exactly through the doubling (composed pointer adds the two
+    segment lengths), so the output is bit-deterministic at any
+    parallelism.
     """
     base = redirects.groupBy("src").agg(F.min("dst").alias("dst"))
     # Non-terminal test set: every url that itself redirects.
     srcs = base.select(F.col("src").alias("dst")).distinct().localCheckpoint()
-    f = base.withColumn("hops", F.lit(1)).localCheckpoint()
-    rounds = max(1, math.ceil(math.log2(max(2, max_chain_len)))) + 1
-    for _ in range(rounds):
-        # Early exit: all pointers already terminal.
-        if f.join(srcs, "dst", "left_semi").isEmpty():
-            break
+
+    def compose(f: DataFrame) -> DataFrame:
         g = f.select(
             F.col("src").alias("g_src"),
             F.col("dst").alias("g_dst"),
             F.col("hops").alias("g_hops"),
         )
-        f = (
-            f.join(g, f["dst"] == g["g_src"], "left")
-            .select(
-                "src",
-                F.coalesce("g_dst", "dst").alias("dst"),
-                (F.col("hops") + F.coalesce("g_hops", F.lit(0))).alias("hops"),
-            )
-            .localCheckpoint()
+        return f.join(g, f["dst"] == g["g_src"], "left").select(
+            "src",
+            F.coalesce("g_dst", "dst").alias("dst"),
+            (F.col("hops") + F.coalesce("g_hops", F.lit(0))).alias("hops"),
+            F.col("g_src").isNotNull().alias(PENDING),
         )
+
+    rounds = max(1, math.ceil(math.log2(max(2, max_chain_len)))) + 1
+    start = base.select("src", "dst", F.lit(1).alias("hops"), F.lit(True).alias(PENDING))
+    f = fixpoint(start, compose, "resolve_redirects", cap=rounds, quiet=True)
     return (
         f.join(srcs.withColumn("__nonterm", F.lit(1)), "dst", "left")
         .select(

@@ -595,6 +595,9 @@ def set_prop(nodes: DataFrame, label: str, prop: str, value: F.Column) -> DataFr
     return set_prop_where(nodes, F.col("label") == label, prop, value)
 
 
+_EXPOSURE_CHECKPOINT_HOPS = 4
+
+
 def exposure_propagation(
     nodes: DataFrame,
     edges: DataFrame,
@@ -602,16 +605,16 @@ def exposure_propagation(
     rel_labels: Sequence[str],
     hops: int,
     flag: str = "exposed",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """N1 semantics: clear ``flag``, seed it where ``seed_predicate``
     holds, then propagate ``hops`` times along ``rel_labels`` edges
     (dst inherits from src), appending the provenance path to
     ``<flag>_via``. Returns updated nodes.
 
-    Deep-hop plan discipline (round 4, VERDICT #5): every
-    ``checkpoint_every`` hops the ``flagged`` frame is localCheckpointed
-    — the same discipline as ``operators/components.py`` — so hops=20
+    Deep-hop plan discipline (round 4, VERDICT #5): every 4 hops
+    (``_EXPOSURE_CHECKPOINT_HOPS``) the ``flagged`` frame is
+    localCheckpointed — the same discipline as
+    ``operators/fixpoint.py`` — so hops=20
     builds a bounded plan instead of 20 nested self-referencing joins
     (lineage growth is quadratic in hops otherwise). ``rel_edges`` is
     checkpointed once up front when the loop is deep, since every
@@ -624,7 +627,7 @@ def exposure_propagation(
         "label", "id", seed_predicate.alias("__flag"), F.when(seed_predicate, F.lit("seed")).alias("__via")
     )
     rel_edges = edges.where(F.col("rel_label").isin(list(rel_labels))).select("src", "dst", "rel_label")
-    if hops > checkpoint_every:
+    if hops > _EXPOSURE_CHECKPOINT_HOPS:
         rel_edges = rel_edges.localCheckpoint()
     for hop in range(hops):
         inherited = (
@@ -650,7 +653,7 @@ def exposure_propagation(
                 F.coalesce(F.col("__via"), F.col("__via_new")).alias("__via"),
             )
         )
-        if (hop + 1) % checkpoint_every == 0 and hop + 1 < hops:
+        if (hop + 1) % _EXPOSURE_CHECKPOINT_HOPS == 0 and hop + 1 < hops:
             flagged = flagged.localCheckpoint()
     return (
         cleared.join(flagged.where(F.col("__flag")).select("label", "id", "__via"), ["label", "id"], "left")

@@ -263,9 +263,9 @@ JOIN g ON e.user_id = g.user_id AND e.ts BETWEEN g.lo AND g.hi
 ORACLES["events_json_props"] = """
 SELECT event_type AS event_type,
        COUNT(*) AS n,
-       SUM(json_extract(props, '$.k')::BIGINT) AS sum_k,
+       SUM(json_extract(props, '$.k')::BIGINT)::BIGINT AS sum_k,
        ROUND(AVG(json_extract(props, '$.k')::BIGINT), 4)::DOUBLE AS avg_k,
-       SUM(CASE WHEN json_extract(props, '$.k') IS NULL THEN 1 ELSE 0 END) AS n_missing
+       SUM(CASE WHEN json_extract(props, '$.k') IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_missing
 FROM events
 GROUP BY event_type
 """
@@ -625,9 +625,12 @@ FROM k ORDER BY doc_id
 """
 
 
-ORACLES["text_quality"] = """
-WITH f AS (
-  SELECT doc_id,
+# Per-doc quality features and score (the expression of
+# operators/textstats.py::text_quality), shared by the text_quality and
+# domain_quality twins. Spark computes it independently.
+_QUALITY_CTES = """
+f AS (
+  SELECT doc_id, source,
          CAST(len(text) AS BIGINT) AS n_chars_calc,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
          len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct,
@@ -637,17 +640,26 @@ WITH f AS (
   FROM documents
 ),
 r AS (
-  SELECT doc_id, n_chars_calc, n_tokens,
+  SELECT doc_id, source, n_chars_calc, n_tokens,
          ROUND((n_chars_calc - (n_tokens - 1)) / n_tokens, 4)::DOUBLE AS avg_token_len,
          ROUND(punct / n_chars_calc, 4)::DOUBLE AS punct_ratio,
          ROUND(stop / n_tokens, 4)::DOUBLE AS stopword_ratio
   FROM f
-)
+),
+q AS (
+  SELECT *,
+         ROUND(least(n_tokens / 100.0, 1.0) * 0.5
+               + least(stopword_ratio * 5.0, 1.0) * 0.4
+               + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.1, 4)::DOUBLE
+           AS quality_score
+  FROM r
+)"""
+
+ORACLES["text_quality"] = f"""
+WITH {_QUALITY_CTES}
 SELECT doc_id, n_chars_calc, n_tokens, avg_token_len, punct_ratio, stopword_ratio,
-       ROUND(least(n_tokens / 100.0, 1.0) * 0.5
-             + least(stopword_ratio * 5.0, 1.0) * 0.4
-             + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.1, 4)::DOUBLE AS quality_score
-FROM r
+       quality_score
+FROM q
 """
 
 ORACLES["text_langid"] = """
@@ -1433,8 +1445,8 @@ def _crawl_frontier_oracle_sql(n_pages: int = 500, seed: int = 42) -> str:
     return f"""
 WITH {_links_ctes(n_pages, seed)}
 SELECT src_host,
-       SUM(CASE WHEN tid < {n_pages} THEN 1 ELSE 0 END) AS n_internal,
-       SUM(CASE WHEN tid < {n_pages} THEN 0 ELSE 1 END) AS n_frontier
+       SUM(CASE WHEN tid < {n_pages} THEN 1 ELSE 0 END)::BIGINT AS n_internal,
+       SUM(CASE WHEN tid < {n_pages} THEN 0 ELSE 1 END)::BIGINT AS n_frontier
 FROM links GROUP BY src_host
 """
 
@@ -3146,7 +3158,7 @@ w{r} AS MATERIALIZED (
          END AS syms
   FROM dc{r})""")
     rules = "\nUNION ALL\n".join(
-        f"SELECT {r} AS merge_rank, lft, rgt, cnt AS pair_count,"
+        f"SELECT {r} AS merge_rank, lft, rgt, cnt::BIGINT AS pair_count,"
         f" lft || rgt AS merged FROM b{r}"
         for r in range(1, k + 1)
     )
@@ -3200,7 +3212,7 @@ ratio AS (
 sc AS (
   SELECT b.doc_id, SUM(b.n) AS n_features, SUM(b.n * r.llr_b) AS llr
   FROM bkt b JOIN ratio r USING (bucket) GROUP BY b.doc_id)
-SELECT doc_id, n_features, ROUND(llr, 6) AS llr,
+SELECT doc_id, n_features::BIGINT AS n_features, ROUND(llr, 6) AS llr,
        ROUND(llr / n_features, 6) AS avg_llr,
        ROUND(llr / n_features, 6) > 0 AS selected
 FROM sc
@@ -3227,7 +3239,7 @@ top AS (SELECT dst_url, anch AS top_anchor, n AS n_top FROM (
           FROM pa) WHERE rn = 1),
 tot AS (SELECT dst_url, SUM(n) AS n_inlinks, COUNT(*) AS n_anchors
         FROM pa GROUP BY dst_url)
-SELECT t.dst_url, t.top_anchor, t.n_top, o.n_inlinks, o.n_anchors
+SELECT t.dst_url, t.top_anchor, t.n_top, o.n_inlinks::BIGINT AS n_inlinks, o.n_anchors
 FROM top t JOIN tot o USING (dst_url)
 """
 
@@ -3239,32 +3251,8 @@ ORACLES["web_anchor_text"] = _anchor_text_oracle_sql()
 # (operators/curation.py::domain_quality): per-doc quality_score is the
 # text_quality expression; domain means shrink toward the corpus mean
 # with pseudo-count k=20. ROUND 6 after every float aggregate.
-ORACLES["domain_quality"] = """
-WITH f AS (
-  SELECT source,
-         CAST(len(text) AS BIGINT) AS n_chars_calc,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         len(text) - len(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct,
-         len(list_filter(string_split(text, ' '),
-             t -> t IN ('the','a','of','and','is','to','in','that','it','with',
-                        'was','for','on','as','are','at','be'))) AS stop
-  FROM documents
-),
-r AS (
-  SELECT source,
-         ROUND(punct / n_chars_calc, 4)::DOUBLE AS punct_ratio,
-         ROUND(stop / n_tokens, 4)::DOUBLE AS stopword_ratio,
-         n_tokens
-  FROM f
-),
-q AS (
-  SELECT source,
-         ROUND(least(n_tokens / 100.0, 1.0) * 0.5
-               + least(stopword_ratio * 5.0, 1.0) * 0.4
-               + (1.0 - least(punct_ratio * 10.0, 1.0)) * 0.1, 4)::DOUBLE
-           AS quality_score
-  FROM r
-),
+ORACLES["domain_quality"] = f"""
+WITH {_QUALITY_CTES},
 d AS (
   SELECT source AS domain, COUNT(*) AS n_docs, AVG(quality_score) AS raw
   FROM q GROUP BY source

@@ -65,6 +65,14 @@ def test_long_chain_converges_in_log_rounds(spark):
     _check(spark, 200, [(i, i + 1) for i in range(199)])
 
 
+def test_max_iter_is_a_safety_cap(spark):
+    # An 8-node path still changes after one round: raise, never return
+    # unconverged labels.
+    df = spark.createDataFrame([(i, i + 1) for i in range(7)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="connected_components.*1 rounds"):
+        connected_components(df, max_iter=1)
+
+
 def test_chain_reversed_ids(spark):
     _check(spark, 40, [(i + 1, i) for i in range(39)])
 

@@ -65,6 +65,12 @@ def test_reach_fixpoint_seed_not_in_result_without_cycle(spark):
     assert got == {"b", "c"}  # no path back to 'a' -> seed excluded
 
 
+def test_reach_fixpoint_raises_on_cap(spark, edges):
+    seeds = spark.createDataFrame([("a",)], "node string")
+    with pytest.raises(RuntimeError, match="reach_fixpoint.*1 rounds"):
+        reach_fixpoint(seeds, edges, max_iter=1)
+
+
 def test_match_path_2hop(spark, edges):
     nodes = spark.createDataFrame(
         [("a", "L1"), ("b", "L2"), ("c", "L3"), ("d", "L1"), ("x", "L1"), ("y", "L2")],

@@ -3,6 +3,7 @@ SCC condensation / DAG layering (operators/graphrank.py)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cartography_spark.operators.graphrank import (
@@ -119,3 +120,19 @@ def test_dag_levels_isolated_nodes_are_sources(spark):
     ndf, edf = _graph(spark, ["x", "y", "z"], [("x", "y")])
     got = {r["id"]: r["level"] for r in dag_levels(ndf, edf).collect()}
     assert got == {"x": 0, "y": 1, "z": 0}
+
+
+def test_dag_levels_cycle_raises_instead_of_hanging(spark):
+    ndf, edf = _graph(spark, list("abc"), [("a", "b"), ("b", "c"), ("c", "a")])
+    with pytest.raises(RuntimeError, match="dag_levels.*4 rounds"):
+        dag_levels(ndf, edf)
+
+
+def test_dag_levels_path_converges_at_derived_bound(spark):
+    # The longest chain over n nodes needs n rounds (n - 1 that raise a
+    # level, one that changes nothing), the most the node-count-derived
+    # cap must allow.
+    nodes = [f"v{i}" for i in range(8)]
+    ndf, edf = _graph(spark, nodes, zip(nodes, nodes[1:]))
+    got = {r["id"]: r["level"] for r in dag_levels(ndf, edf).collect()}
+    assert got == {v: i for i, v in enumerate(nodes)}

@@ -146,6 +146,18 @@ def test_scc_chain_of_cycles(spark):
     assert len(set(got.values())) == 5
 
 
+def test_scc_path_converges_at_derived_bound(spark):
+    # Ascending ids along a path: only the subgraph minimum passes the
+    # f == b test, so exactly one node retires per outer round (n
+    # rounds), and the backward labels need n - 1 relaxations — the
+    # worst case for the node-count-derived caps.
+    nodes = [f"p{i}" for i in range(6)]
+    edges = list(zip(nodes, nodes[1:]))
+    ndf, edf = _frames(spark, nodes, edges)
+    got = {r["id"]: r["scc"] for r in strongly_connected_components(ndf, edf).collect()}
+    assert got == {v: v for v in nodes}
+
+
 def test_bowtie_hand_graph(spark):
     # IN -> CORE -> OUT with a tendril off IN and an island:
     #   i1 -> a; core = {a,b,c} 3-cycle; c -> o1 -> o2; i1 -> t (t is a
