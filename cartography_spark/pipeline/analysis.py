@@ -245,7 +245,7 @@ class AnalysisJob:
         last: CommitConflict | None = None
         for _ in range(_COMMIT_RETRIES):
             self._observations = []
-            seq0 = store._pointer().get("seq", 0)
+            seq0 = store._seq()
             full_nodes, edges = store.read_nodes(), store.read_edges()
             touched = self._touched_labels(full_nodes, edges, params)
             manifest = store._manifest("nodes") or {"partitions": {}, "deletes": []}

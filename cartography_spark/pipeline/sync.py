@@ -4,10 +4,14 @@ Re-expression of the reference's sync lifecycle:
 
 - :func:`load` is the hot path — the analog of
   ``cartography/client/core/tx.py:283-303`` (``load``): empty-input
-  short-circuit (``tx.py:298-300``), schema-compiled node upsert, then one
-  edge upsert per declared relationship. Batching (``tx.py:231``: 10k dicts
-  per transaction) becomes partition-parallel writes; one store version per
-  load is the transaction analog.
+  short-circuit (``tx.py:298-300``), schema-compiled node upsert, and one
+  edge upsert covering every declared relationship. Batching
+  (``tx.py:231``: 10k dicts per transaction) becomes partition-parallel
+  writes. A load is ONE store transaction, the analog of the reference's
+  one ``tx`` per load: the node and edge merges stage their writes
+  concurrently (independent Spark jobs overlap on the executors) and
+  publish with one commit, so a load is all-or-nothing and bumps the
+  store version once.
 - :class:`Sync` is the analog of ``cartography/sync.py:126-156``: named
   stages run sequentially in declared order, each stamped with the run's
   ``update_tag`` (epoch seconds, ``sync.py:280-282``); a stage ledger makes
@@ -26,9 +30,8 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+from functools import partial, reduce
 from typing import Any, Callable, Mapping, Sequence
-
-from functools import reduce
 
 from pyspark.sql import DataFrame
 
@@ -39,7 +42,7 @@ from cartography_spark.schema.compiler import (
 )
 from cartography_spark.schema.nodes import NodeSchema
 from cartography_spark.schema.relationships import MatchLinkSchema, RelSchema
-from cartography_spark.store.graphstore import GraphStore
+from cartography_spark.store.graphstore import GraphStore, _concurrently
 
 
 def load(
@@ -50,28 +53,65 @@ def load(
     selected_rels: Sequence[RelSchema] | None = None,
     **params: Any,
 ) -> dict[str, int]:
-    """Schema-driven ingest of one DataFrame of items."""
-    if df.isEmpty():  # reference short-circuit tx.py:298-300
-        return {"created": 0, "updated": 0, "edges": 0}
+    """Schema-driven ingest of one DataFrame of items, as ONE store
+    transaction (:meth:`GraphStore.transaction`): the node merge and the
+    edge merge stage concurrently and publish together, one pointer-seq
+    bump per load. A concurrent commit re-runs the whole load against
+    the new snapshot, up to the store's commit-retry bound.
+
+    The edge matcher join reads the pre-load node snapshot, unless a rel
+    targets the label this load writes (a self-referencing rel, e.g.
+    Page LINKS_TO Page): then the edge merge waits for the node merge
+    and matches against the staged nodes, as a node-then-edge sequence
+    would. Empty input (reference short-circuit ``tx.py:298-300``)
+    commits nothing and records nothing: the merges observe zero rows,
+    so the transaction stages nothing."""
     df = df.cache()  # consumed by the node plan + every edge plan
-    node_updates = compile_node_updates(schema, df, params)
-    node_counters = store.merge_nodes(node_updates, update_tag)
-    edge_counters: dict[str, int] = {}
-    plans = compile_edge_updates(schema, df, store.read_nodes(), params, selected_rels)
-    if plans:
-        # Independent per-rel joins unioned into ONE edge merge: keeps the
-        # reference's CALL{} isolation semantics while paying a single
-        # decomposed MERGE (broadcast-able LEFT OUTER update pass + key-only
-        # ANTI create pass, bucket-scoped read/rewrite) against the edge
-        # table instead of one merge per rel plan.
-        all_edges = reduce(lambda a, b: a.unionByName(b), plans)
-        edge_counters = store.merge_edges(all_edges, update_tag)
-    df.unpersist()
+    try:
+        node_counters, edge_counters = store._transact(
+            partial(_load_once, store, schema, df, update_tag, selected_rels, params)
+        )
+    finally:
+        df.unpersist()
     return {
         "created": node_counters["created"],
         "updated": node_counters["updated"],
         "edges": edge_counters.get("created", 0) + edge_counters.get("updated", 0),
     }
+
+
+def _load_once(
+    store: GraphStore,
+    schema: NodeSchema,
+    df: DataFrame,
+    update_tag: int,
+    selected_rels: Sequence[RelSchema] | None,
+    params: Mapping[str, Any],
+) -> tuple[dict[str, int], dict[str, int]]:
+    """One attempt of :func:`load` inside its open transaction."""
+    merge_nodes = partial(store.merge_nodes, compile_node_updates(schema, df, params), update_tag)
+
+    def merge_edges(nodes: DataFrame) -> dict[str, int]:
+        plans = compile_edge_updates(schema, df, nodes, params, selected_rels)
+        if not plans:
+            return {}
+        # Independent per-rel joins unioned into ONE edge merge: keeps the
+        # reference's CALL{} isolation semantics while paying a single
+        # decomposed MERGE (broadcast-able LEFT OUTER update pass + key-only
+        # ANTI create pass, bucket-scoped read/rewrite) against the edge
+        # table instead of one merge per rel plan.
+        return store.merge_edges(reduce(lambda a, b: a.unionByName(b), plans), update_tag)
+
+    rels = schema.all_relationships if selected_rels is None else selected_rels
+    if any(r.target_node_label == schema.label for r in rels):
+        node_counters = merge_nodes()
+        if not node_counters["rows_total"]:
+            return node_counters, {}
+        return node_counters, merge_edges(store.read_nodes())
+    node_counters, edge_counters = _concurrently(
+        merge_nodes, partial(merge_edges, store.read_nodes())
+    )
+    return node_counters, edge_counters
 
 
 def load_matchlink(
@@ -82,11 +122,15 @@ def load_matchlink(
     scope_id: str,
     **params: Any,
 ) -> dict[str, int]:
-    """Standalone rel ingest between two existing node sets (J7)."""
-    if df.isEmpty():
-        return {"edges": 0}
-    edges = compile_matchlink(link, df, store.read_nodes(), params, scope_id=scope_id)
-    c = store.merge_edges(edges, update_tag)
+    """Standalone rel ingest between two existing node sets (J7), as one
+    store transaction like :func:`load` (empty input commits nothing)."""
+
+    def merge() -> dict[str, int]:
+        nodes = store.read_nodes()
+        edges = compile_matchlink(link, df, nodes, params, scope_id=scope_id)
+        return store.merge_edges(edges, update_tag)
+
+    c = store._transact(merge)
     return {"edges": c["created"] + c["updated"]}
 
 

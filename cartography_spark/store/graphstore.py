@@ -58,6 +58,12 @@ key deleted then re-merged is NOT re-deleted at read time).
   reference gets this from Neo4j ACID transactions,
   ``client/core/tx.py:178-213``). CURRENT carries a ``format`` field
   (:data:`STORE_FORMAT`) so incompatible layouts fail fast.
+- :meth:`GraphStore.transaction` groups several mutations into ONE
+  commit: inside it every mutation stages its (version, manifest)
+  instead of swapping the pointer, reads see the staged manifests, and
+  the exit publishes everything with one CAS against the seq read at
+  entry — ``pipeline.sync.load`` is one transaction (node and edge
+  merges), the reference's one ``tx`` per load.
 
 On a real deployment both tables are Iceberg and ``merge_nodes`` is
 ``MERGE INTO nodes t USING s ON t.label=s.label AND t.id=s.id`` with
@@ -86,6 +92,8 @@ deletes such rows either).
 
 from __future__ import annotations
 
+import contextvars
+import copy
 import fcntl
 import functools
 import json
@@ -94,9 +102,12 @@ import os
 import time
 import urllib.parse
 from contextlib import contextmanager
+from dataclasses import dataclass, field
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window
+from pyspark.util import InheritableThread
 
 #: On-disk layout version, stamped into CURRENT. Bumped when the layout
 #: breaks (v3 = hash-bucketed partitions: manifest entries are
@@ -118,6 +129,58 @@ class CommitConflict(Exception):
 
 class StoreFormatError(Exception):
     """CURRENT was written by an incompatible store layout version."""
+
+
+@dataclass
+class _Transaction:
+    """One open :meth:`GraphStore.transaction`: the snapshot seq it
+    builds on, the (version, manifest) staged per table, and the
+    metrics rows to append once the commit lands. Concurrent stagers
+    write distinct tables (dict item assignment and list append are
+    atomic under the GIL)."""
+
+    seq: int
+    staged: dict[str, tuple[str, dict]] = field(default_factory=dict)
+    metrics: list[dict] = field(default_factory=list)
+
+
+#: The open transactions, per store handle. A context variable, so a
+#: transaction is visible to the code that opened it and to the threads
+#: ``_concurrently`` starts for it, and to nothing else.
+_OPEN_TXNS: contextvars.ContextVar[dict] = contextvars.ContextVar("graphstore_txns", default={})
+
+
+def _concurrently(*fns: Callable[[], Any]) -> list[Any]:
+    """Run ``fns`` on threads of their own and return their results in
+    order. Each thread inherits the caller's Spark local properties
+    (job group, scheduler pool — ``InheritableThread``) and a copy of its
+    context variables (the open store transaction), so its jobs are
+    attributed to the caller and its writes stage into the caller's
+    transaction. Every thread is joined before the first error, if any,
+    is re-raised."""
+    if len(fns) == 1:
+        return [fns[0]()]
+    results: list[Any] = [None] * len(fns)
+    errors: list[BaseException | None] = [None] * len(fns)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            errors[i] = e
+
+    threads = [
+        InheritableThread(contextvars.copy_context().run, args=(run, i))
+        for i in range(len(fns))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
 
 NODES_SCHEMA = T.StructType(
     [
@@ -361,32 +424,114 @@ class GraphStore:
         return os.path.join(self.root, "manifests", table, f"{version}.json")
 
     def _manifest(self, table: str, version: str | None = None) -> dict | None:
+        """The manifest of ``version``, else the current one — inside a
+        transaction, the one it staged for ``table`` if any (a copy, so
+        callers may edit it)."""
+        txn = self._txn()
+        if version is None and txn is not None and table in txn.staged:
+            return copy.deepcopy(txn.staged[table][1])
         v = version or self._pointer().get(table)
         if v is None:
             return None
         with open(self._manifest_path(table, v)) as f:
             return json.load(f)
 
+    # ---------- transactions ----------
+
+    def _txn(self) -> _Transaction | None:
+        return _OPEN_TXNS.get().get(self)
+
+    def _seq(self) -> int:
+        """The snapshot seq a mutation builds on: the open transaction's,
+        else the pointer's. Read it BEFORE the manifest (see
+        ``_merge_cached``)."""
+        txn = self._txn()
+        return txn.seq if txn is not None else self._pointer().get("seq", 0)
+
+    @contextmanager
+    def transaction(self):
+        """Group mutations into one atomic commit (one pointer-seq bump).
+
+        On entry the pointer seq is read. Inside, ``merge_nodes``,
+        ``merge_edges``, the sweeps' tombstone writes and every other
+        mutation of this store handle stage their (version, manifest)
+        instead of committing, and reads of this handle see what is
+        staged. On a normal exit everything staged is published with one
+        CAS against the entry seq, and the mutations' metrics rows are
+        appended; a transaction that staged nothing commits and records
+        nothing. If the body raises, nothing is published (the data
+        written so far is an orphan for ``expire_versions``). A
+        concurrent commit makes the exit raise :class:`CommitConflict`:
+        the caller re-runs the WHOLE unit against the new snapshot, as
+        ``pipeline.sync.load`` does. Opening a transaction inside an
+        open one (same handle) joins it.
+
+        Work may fan out to threads started by ``_concurrently``; two
+        staged writes to the SAME table must not run concurrently (the
+        later one would not build on the earlier)."""
+        if self._txn() is not None:
+            yield
+            return
+        txn = _Transaction(self._pointer().get("seq", 0))
+        token = _OPEN_TXNS.set({**_OPEN_TXNS.get(), self: txn})
+        try:
+            yield
+        finally:
+            _OPEN_TXNS.reset(token)
+        if txn.staged:
+            self._publish(txn.staged, txn.seq)
+            self._append_metrics(txn.metrics)
+
+    def _transact(self, unit: Callable[[], Any]) -> Any:
+        """Run ``unit`` inside one :meth:`transaction` and return its
+        result; when the commit meets a concurrent one, re-run the WHOLE
+        unit against the new snapshot, up to ``_COMMIT_RETRIES`` times.
+        Inside an open transaction the unit joins it, and a conflict
+        surfaces at that transaction's exit instead."""
+        last: CommitConflict | None = None
+        for _ in range(_COMMIT_RETRIES):
+            try:
+                with self.transaction():
+                    return unit()
+            except CommitConflict as e:
+                last = e
+        raise last  # type: ignore[misc]
+
     def _commit_manifest(
         self, table: str, version: str, manifest: dict, expected_seq: int | None = None
-    ) -> int:
+    ) -> None:
         """Write manifest then CAS-swap the pointer (write-then-publish:
         readers of the old pointer never see a half-written manifest).
         ``expected_seq`` is the pointer seq this mutation's snapshot was
         read at; if another writer committed since, raises
         :class:`CommitConflict` (nothing published — the data/manifest
-        files written so far are orphans for GC). Returns the new seq.
-        Delete entries older than every live partition prune away."""
-        return self._commit_manifests({table: (version, manifest)}, expected_seq)
+        files written so far are orphans for GC). Delete entries older
+        than every live partition prune away."""
+        self._commit_manifests({table: (version, manifest)}, expected_seq)
 
     def _commit_manifests(
         self, commits: dict[str, tuple[str, dict]], expected_seq: int | None = None
-    ) -> int:
+    ) -> None:
         """Atomically publish manifests for one or MORE tables in a
         single CAS pointer swap — a multi-table transaction (the sweep
         uses it so node tombstones and their DETACH edge tombstones
         become visible together, like the reference's single
-        ``DETACH DELETE`` transaction)."""
+        ``DETACH DELETE`` transaction). Inside an open
+        :meth:`transaction` the manifests are staged instead; a pinned
+        ``expected_seq`` other than the transaction's raises
+        :class:`CommitConflict` at once."""
+        txn = self._txn()
+        if txn is None:
+            self._publish(commits, expected_seq)
+            return
+        if expected_seq is not None and expected_seq != txn.seq:
+            raise CommitConflict(
+                f"commit of {sorted(commits)}: built on seq {expected_seq}, the "
+                f"open transaction on seq {txn.seq} — retry from the new snapshot"
+            )
+        txn.staged.update(commits)
+
+    def _publish(self, commits: dict[str, tuple[str, dict]], expected_seq: int | None) -> None:
         for _, manifest in commits.values():
             parts = manifest["partitions"]
             manifest["deletes"] = [
@@ -418,7 +563,6 @@ class GraphStore:
             with open(ptmp, "w") as f:
                 json.dump(cur, f)
             os.replace(ptmp, os.path.join(self.root, "CURRENT"))
-            return cur["seq"]
 
     def node_versions(self) -> list[str]:
         d = os.path.join(self.root, "manifests", "nodes")
@@ -524,6 +668,7 @@ class GraphStore:
         if not parts:
             return self._empty(schema)
         key = _KEY[table]
+        key_schema = T.StructType([schema[k] for k in key])
         groups: dict[int, list[str]] = {}
         for pval, info in parts.items():
             allowed = None
@@ -600,9 +745,12 @@ class GraphStore:
                 if d["seq"] > seq and overlaps(d)
             ]
             if dels:
-                keys = self.spark.read.parquet(
+                # Declared key schema: no schema-inference job per read.
+                # Duplicate keys across tombstones cannot change an
+                # anti-join, so they are not deduplicated.
+                keys = self.spark.read.schema(key_schema).parquet(
                     *[os.path.join(self.root, d["path"]) for d in dels]
-                ).dropDuplicates(key)
+                )
                 df = df.join(keys, key, "left_anti")
             out = df if out is None else out.unionByName(df)
         assert out is not None
@@ -777,7 +925,7 @@ class GraphStore:
         pinned = expected_seq is not None
         last: CommitConflict | None = None
         for _ in range(_COMMIT_RETRIES):
-            seq0 = expected_seq if pinned else self._pointer().get("seq", 0)
+            seq0 = expected_seq if pinned else self._seq()
             try:
                 return self._replace_partitions_once(table, df, partitions, seq0)
             except CommitConflict as e:
@@ -831,15 +979,23 @@ class GraphStore:
         ``ModuleSyncMetadata``, ``util.py:136-174``). Appended as one
         JSONL line like the manifests (a 1-row Spark parquet append
         costs seconds of job overhead per mutation — metrics are
-        metadata, not data; they stay queryable via read_metrics)."""
+        metadata, not data; they stay queryable via read_metrics). Inside
+        a transaction the row waits for its commit."""
         row = {
             "op": op,
             "update_tag": int(update_tag),
             "wall_ts": float(time.time()),
             "counters": {k: int(v) for k, v in counters.items()},
         }
+        txn = self._txn()
+        if txn is not None:
+            txn.metrics.append(row)
+        else:
+            self._append_metrics([row])
+
+    def _append_metrics(self, rows: list[dict]) -> None:
         with open(os.path.join(self.root, "metrics.jsonl"), "a") as f:
-            f.write(json.dumps(row) + "\n")
+            f.writelines(json.dumps(row) + "\n" for row in rows)
 
     def read_metrics(self) -> DataFrame:
         path = os.path.join(self.root, "metrics.jsonl")
@@ -891,17 +1047,52 @@ class GraphStore:
         new_promoted = sorted(c for c in new.columns if c.startswith("_p_"))
 
         # The decomposed MERGE (see merge_frames) reads ``new`` twice
-        # (update pass + create pass) and a third time for the touched
-        # partition set — cache the deduped batch so its window shuffle
-        # runs once. Released in the finally below.
-        new = new.persist()
-        try:
-            return self._merge_cached(
-                table, schema, key, new, new_promoted, update_tag, partition_col,
-                expected_seq=expected_seq,
+        # (update pass + create pass): checkpoint the deduped batch so its
+        # window shuffle runs once. The same job observes what steers the
+        # plan — the row count, the NULL-key count and the touched
+        # (partition value, bucket id) set, at most labels x bucket_count
+        # entries, never row count — so no job runs just to plan.
+        nb = self._bucket_count(self._manifest(table))
+        null_key = functools.reduce(operator.or_, [F.col(k).isNull() for k in key])
+        obs = Observation()
+        new = new.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.count_if(null_key).alias("null_keys"),
+            F.collect_set(
+                F.struct(F.col(partition_col).alias("p"), self._bucket_col(table, nb).alias("b"))
+            ).alias("touched"),
+        ).localCheckpoint(eager=True)
+        steer = obs.get
+        # NULL merge-key columns are rejected, not absorbed: a NULL
+        # key never equi-matches, so such rows would always take the
+        # create pass (duplicating on every merge), never match a
+        # tombstone anti-join (undeletable), and — worst — a NULL
+        # partition value would be written under
+        # __HIVE_DEFAULT_PARTITION__, REPLACING that partition's
+        # manifest entries and silently losing every previously stored
+        # row there. The reference has
+        # the same contract (Cypher MERGE on a null property errors).
+        if steer["null_keys"]:
+            raise ValueError(
+                f"merge_{table}: updates contain NULL values in merge-key "
+                f"column(s) {key} — keys must be non-null"
             )
-        finally:
-            new.unpersist()
+        if not steer["rows"]:
+            # Empty batch: a MERGE of nothing is a no-op — commit
+            # nothing (also: the write plan over an all-empty input
+            # would let AQE's empty-relation propagation eliminate
+            # the CollectMetrics node, breaking Observation.get).
+            counters = {"rows_total": 0, "created": 0, "updated": 0}
+            self._record_metrics(f"merge_{table}", update_tag, counters)
+            return {**counters, "version": self._pointer().get(table)}
+        touched: dict[str, set] = {}
+        for r in steer["touched"]:
+            touched.setdefault(r["p"], set()).add(int(r["b"]))
+        return self._merge_cached(
+            table, schema, key, new, new_promoted, update_tag, partition_col,
+            (nb, touched), expected_seq=expected_seq,
+        )
 
     def _merge_cached(
         self,
@@ -912,10 +1103,9 @@ class GraphStore:
         new_promoted: list[str],
         update_tag: int,
         partition_col: str,
+        observed: tuple[int, dict[str, set]],
         expected_seq: int | None = None,
     ) -> dict[str, int]:
-        from pyspark.sql import Observation
-
         last: CommitConflict | None = None
         for _ in range(_COMMIT_RETRIES):
             # Snapshot seq MUST be read before the manifest: a commit
@@ -927,54 +1117,19 @@ class GraphStore:
             # must surface so it can rebuild that plan, not be retried
             # here against the caller's stale inputs (round 4, ADVICE
             # fix).
-            seq0 = expected_seq if expected_seq is not None else self._pointer().get("seq", 0)
+            seq0 = expected_seq if expected_seq is not None else self._seq()
             manifest = self._manifest(table) or {"partitions": {}, "deletes": []}
             # Bucket pruning (round 5, VERDICT #1): only the (partition,
             # bucket) groups containing the update's keys are read,
             # merged, and rewritten; every other BUCKET carries forward
-            # by manifest reference. The distinct() is on (partition
-            # value, bucket id) — at most labels x bucket_count rows,
-            # never row count. Recomputed per retry: a concurrent full
-            # compaction may have re-bucketed the table.
-            nb = self._bucket_count(manifest)
-            null_key = functools.reduce(
-                operator.or_, [F.col(k).isNull() for k in key]
-            )
-            pairs = (
-                new.select(
-                    partition_col,
-                    self._bucket_col(table, nb).alias("__b"),
-                    null_key.alias("__nullkey"),
-                )
-                .distinct()
-                .collect()
-            )
-            # NULL merge-key columns are rejected, not absorbed: a NULL
-            # key never equi-matches, so such rows would always take the
-            # create pass (duplicating on every merge), never match a
-            # tombstone anti-join (undeletable), and — worst — a NULL
-            # partition value would be dropped from `touched` while
-            # _write_data still emits it under __HIVE_DEFAULT_PARTITION__,
-            # REPLACING that partition's manifest entries and silently
-            # losing every previously stored row there. The reference has
-            # the same contract (Cypher MERGE on a null property errors).
-            if any(r["__nullkey"] for r in pairs):
-                raise ValueError(
-                    f"merge_{table}: updates contain NULL values in merge-key "
-                    f"column(s) {key} — keys must be non-null"
-                )
-            if not pairs:
-                # Empty batch: a MERGE of nothing is a no-op — commit
-                # nothing (also: the write plan over an all-empty input
-                # would let AQE's empty-relation propagation eliminate
-                # the CollectMetrics node, breaking Observation.get).
-                counters = {"rows_total": 0, "created": 0, "updated": 0}
-                self._record_metrics(f"merge_{table}", update_tag, counters)
-                return {**counters, "version": self._pointer().get(table)}
-            touched: dict[str, set] = {}
-            for r in pairs:
-                if r[0] is not None:
-                    touched.setdefault(r[0], set()).add(int(r[1]))
+            # by manifest reference. The touched set was observed at
+            # the bucket count the checkpoint saw; if a concurrent full
+            # compaction has since re-bucketed the table, the touched
+            # partitions are read and rewritten whole instead.
+            nb, touched = observed
+            if self._bucket_count(manifest) != nb:
+                nb = self._bucket_count(manifest)
+                touched = {p: set(range(nb)) for p in touched}
             promoted = sorted(set(manifest.get("columns", [])) | set(new_promoted))
             cols = [f.name for f in schema.fields] + promoted
             # Fail fast on a retype BEFORE the join coerces it silently:
@@ -1089,37 +1244,36 @@ class GraphStore:
         tables atomically) via ``_commit_manifests``. Returns
         (rows_deleted, new_version, manifest). No data directory is
         touched — sweep cost is the key scan plus a key-sized write,
-        independent of table size."""
-        from pyspark.sql import Observation
+        independent of table size.
 
+        The write also observes which (partition, bucket) groups the
+        tombstone can touch (the key's leading column IS the partition
+        column, and the key hashes to exactly one bucket): compaction
+        then rewrites only affected buckets and prunes dead tombstones,
+        instead of folding the whole table."""
         manifest = self._manifest(table)
         if manifest is None:
             return 0, None, None
         v = self._allocate_version(table)
         path = os.path.join(self.root, "deletes", table, v)
-        obs = Observation(f"delete_{table}_{v}")
-        keys.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
-        n = int(obs.get["n"] or 0)
-        if n == 0:
-            return 0, None, None
-        # Record which (partition, bucket) groups this tombstone can
-        # touch (the key's leading column IS the partition column, and
-        # the key hashes to exactly one bucket): compaction then
-        # rewrites only affected buckets and prunes dead tombstones,
-        # instead of folding the whole table. One distinct over the
-        # just-written (small) key file.
         pcol = _PARTITION_COL[table]
         nb = self._bucket_count(manifest)
-        pairs = (
-            self.spark.read.parquet(path)
-            .select(pcol, self._bucket_col(table, nb).alias("__b"))
-            .distinct()
-            .collect()
-        )
+        obs = Observation(f"delete_{table}_{v}")
+        keys.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set(
+                F.struct(F.col(pcol).alias("p"), self._bucket_col(table, nb).alias("b"))
+            ).alias("scope"),
+        ).write.mode("overwrite").parquet(path)
+        got = obs.get
+        n = int(got["n"] or 0)
+        if n == 0:
+            return 0, None, None
         buckets: dict[str, list] = {}
-        for r in pairs:
-            pv = r[0] if r[0] is not None else "__HIVE_DEFAULT_PARTITION__"
-            buckets.setdefault(pv, []).append(int(r[1]))
+        for r in got["scope"]:
+            pv = r["p"] if r["p"] is not None else "__HIVE_DEFAULT_PARTITION__"
+            buckets.setdefault(pv, []).append(int(r["b"]))
         manifest["deletes"] = list(manifest.get("deletes", [])) + [
             {
                 "path": os.path.join("deletes", table, v),
@@ -1137,7 +1291,7 @@ class GraphStore:
         blind retry would tombstone rows a concurrent writer just
         refreshed — the caller must recompute the doomed set from the
         new snapshot (the sweep paths do exactly that)."""
-        seq0 = self._pointer().get("seq", 0)
+        seq0 = self._seq()
         n, v, man = self._prepare_deletes(table, keys)
         if n == 0:
             return 0, None
@@ -1170,7 +1324,9 @@ class GraphStore:
 
         One distributed anti-join replaces the reference's LIMIT-100
         delete loop (``graph/job.py:163-173``) — no iteration needed.
-        Deletes are merge-on-read tombstone files: NO table rewrite.
+        Deletes are merge-on-read tombstone files: NO table rewrite. The
+        node and edge tombstones are written concurrently and published
+        as one transaction (one commit); a conflict re-runs the sweep.
         Rows with NULL scope_id / lastupdated never match a stale
         predicate and are kept (Cypher ``<>`` null semantics).
         """
@@ -1191,9 +1347,7 @@ class GraphStore:
         rel_labels = [r.rel_label for r in rels]
         delete_nodes = has_sub or not node_schema.scoped_cleanup
 
-        last: CommitConflict | None = None
-        for _ in range(_COMMIT_RETRIES):
-            seq0 = self._pointer().get("seq", 0)
+        def once() -> dict[str, int]:
             nodes = self.read_nodes()
             edges = self.read_edges()
 
@@ -1206,68 +1360,66 @@ class GraphStore:
                 stale_edge = stale_edge & (F.col("scope_id") == scope_id)
             stale_edges = edges.where(_is_stale(stale_edge))
 
-            nodes_deleted = 0
-            commits: dict[str, tuple[str, dict]] = {}
-            doomed_edges = stale_edges.select(*_EDGE_KEY)
+            doomed = {"edges": stale_edges.select(*_EDGE_KEY)}
             if delete_nodes:
                 stale_node = (F.col("label") == label) & (F.col("lastupdated") != tag)
                 if has_sub:
                     stale_node = stale_node & (F.col("scope_id") == scope_id)
-                doomed = nodes.where(_is_stale(stale_node)).select(*_NODE_KEY)
-                nodes_deleted, dv, nman = self._prepare_deletes("nodes", doomed)
-                if nodes_deleted:
-                    commits["nodes"] = (dv, nman)
-                    # DETACH DELETE: tombstone every edge touching a
-                    # deleted node. Read the just-written (small) key
-                    # file back so the doomed set is computed once, then
-                    # two semi-joins.
-                    dn = self.spark.read.parquet(
-                        os.path.join(self.root, "deletes", "nodes", dv)
-                    )
-                    # Endpoint-label match, with a bare-id fallback for
-                    # edges merged out-of-band with NULL src/dst labels
-                    # (round-4 fix, VERDICT #4) — the reference's DETACH
-                    # DELETE (cleanupbuilder.py:176-181) drops every rel
-                    # touching the node unconditionally. The equi half
-                    # (id match) stays the hash key; the label clause is
-                    # a post-filter on the same semi-join.
-                    dns = dn.select(F.col("id").alias("__d_id"), F.col("label").alias("__d_label"))
-                    det_src = edges.join(
-                        dns,
-                        (F.col("src") == F.col("__d_id"))
-                        & ((F.col("src_label") == F.col("__d_label")) | F.col("src_label").isNull()),
-                        "left_semi",
-                    )
-                    det_dst = edges.join(
-                        dns,
-                        (F.col("dst") == F.col("__d_id"))
-                        & ((F.col("dst_label") == F.col("__d_label")) | F.col("dst_label").isNull()),
-                        "left_semi",
-                    )
-                    doomed_edges = (
-                        det_src.select(*_EDGE_KEY)
-                        .unionByName(det_dst.select(*_EDGE_KEY))
-                        .unionByName(doomed_edges)
-                        .dropDuplicates(_EDGE_KEY)
-                    )
-            edges_deleted, ev, eman = self._prepare_deletes("edges", doomed_edges)
-            if edges_deleted:
-                commits["edges"] = (ev, eman)
-            try:
-                if commits:
-                    # ONE atomic publish: node tombstones and their
-                    # DETACH edge tombstones become visible together —
-                    # a conflict retries the WHOLE sweep, so a stale set
-                    # recomputed from the winner's snapshot stays
-                    # consistent (no orphaned detach edges).
-                    self._commit_manifests(commits, expected_seq=seq0)
-            except CommitConflict as e:
-                last = e
-                continue
-            counters = {"nodes_deleted": nodes_deleted, "edges_deleted": edges_deleted}
-            self._record_metrics(f"sweep_{label}", update_tag, counters)
-            return counters
-        raise last  # type: ignore[misc]
+                doomed["nodes"] = nodes.where(_is_stale(stale_node)).select(*_NODE_KEY)
+                # DETACH DELETE: tombstone every edge touching a doomed
+                # node — two semi-joins against the doomed-node PLAN
+                # (one snapshot, so both tombstone writes see the same
+                # set), which lets the two writes run concurrently.
+                # Endpoint-label match, with a bare-id fallback for
+                # edges merged out-of-band with NULL src/dst labels
+                # (round-4 fix, VERDICT #4) — the reference's DETACH
+                # DELETE (cleanupbuilder.py:176-181) drops every rel
+                # touching the node unconditionally. The equi half
+                # (id match) stays the hash key; the label clause is
+                # a post-filter on the same semi-join.
+                dns = doomed["nodes"].select(F.col("id").alias("__d_id"), F.col("label").alias("__d_label"))
+                det_src = edges.join(
+                    dns,
+                    (F.col("src") == F.col("__d_id"))
+                    & ((F.col("src_label") == F.col("__d_label")) | F.col("src_label").isNull()),
+                    "left_semi",
+                )
+                det_dst = edges.join(
+                    dns,
+                    (F.col("dst") == F.col("__d_id"))
+                    & ((F.col("dst_label") == F.col("__d_label")) | F.col("dst_label").isNull()),
+                    "left_semi",
+                )
+                doomed["edges"] = (
+                    det_src.select(*_EDGE_KEY)
+                    .unionByName(det_dst.select(*_EDGE_KEY))
+                    .unionByName(doomed["edges"])
+                    .dropDuplicates(_EDGE_KEY)
+                )
+            written = dict(
+                zip(
+                    doomed,
+                    _concurrently(
+                        *[functools.partial(self._prepare_deletes, t, k) for t, k in doomed.items()]
+                    ),
+                )
+            )
+            commits = {t: (v, man) for t, (n, v, man) in written.items() if n}
+            if commits:
+                # ONE atomic publish: node tombstones and their DETACH
+                # edge tombstones become visible together — a conflict
+                # re-runs the WHOLE sweep, so a stale set recomputed
+                # from the winner's snapshot stays consistent (no
+                # orphaned detach edges).
+                self._commit_manifests(commits)
+            return {
+                "nodes_deleted": written.get("nodes", (0,))[0],
+                "edges_deleted": written["edges"][0],
+            }
+
+        counters = self._transact(once)
+        self._record_metrics(f"sweep_{label}", update_tag, counters)
+        return counters
 
     def sweep_matchlink(self, matchlink, update_tag: int, scope_id: str) -> dict[str, int]:
         """MatchLink cleanup (C5): delete stale rels of this label within
@@ -1277,22 +1429,19 @@ class GraphStore:
             & (F.col("scope_id") == scope_id)
             & (F.col("lastupdated") != int(update_tag))
         )
-        last: CommitConflict | None = None
-        for _ in range(_COMMIT_RETRIES):
-            seq0 = self._pointer().get("seq", 0)
+
+        def once() -> int:
             doomed = self.read_edges().where(_is_stale(stale)).select(*_EDGE_KEY)
             deleted, v, man = self._prepare_deletes("edges", doomed)
-            try:
-                if deleted:
-                    self._commit_manifests({"edges": (v, man)}, expected_seq=seq0)
-            except CommitConflict as e:
-                last = e
-                continue
-            self._record_metrics(
-                f"sweep_link_{matchlink.rel_label}", update_tag, {"edges_deleted": deleted}
-            )
-            return {"edges_deleted": deleted}
-        raise last  # type: ignore[misc]
+            if deleted:
+                self._commit_manifests({"edges": (v, man)})
+            return deleted
+
+        deleted = self._transact(once)
+        self._record_metrics(
+            f"sweep_link_{matchlink.rel_label}", update_tag, {"edges_deleted": deleted}
+        )
+        return {"edges_deleted": deleted}
 
     # ---------- maintenance ----------
 
@@ -1439,7 +1588,7 @@ class GraphStore:
         fresh seq); rewrite cost tracks minority-seq bytes."""
         last: CommitConflict | None = None
         for _ in range(_COMMIT_RETRIES):
-            seq0 = self._pointer().get("seq", 0)
+            seq0 = self._seq()
             manifest = self._manifest(table)
             if manifest is None:
                 return {}
@@ -1558,7 +1707,7 @@ class GraphStore:
         for t in [table] if table else ["nodes", "edges"]:
             last: CommitConflict | None = None
             for _ in range(_COMMIT_RETRIES):
-                seq0 = self._pointer().get("seq", 0)
+                seq0 = self._seq()
                 manifest = self._manifest(t)
                 if manifest is None:
                     break

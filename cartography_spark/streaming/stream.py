@@ -286,7 +286,7 @@ def stream_to_store(
         # whole read+plan on conflict (round 4, ADVICE fix).
         last_conflict: CommitConflict | None = None
         for _ in range(_COMMIT_RETRIES):
-            seq0 = store._pointer().get("seq", 0)
+            seq0 = store._seq()
             eman = store._manifest("edges")
             # bucket count re-read per retry (a concurrent full
             # compaction may have re-bucketed). The bucket expression is

@@ -4,6 +4,11 @@ column names, and order-insensitive values tagged with their column's
 type (see ``norm_cell``).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+
+Runs ``local[N]`` with N from ``SPARK_GRAFT_CPUS``, else the cores this
+process may use. Spark's console progress bar is off, so every gate's
+result line survives line-based filters, and the run ends with a
+per-gate summary table (gate, status, rows, seconds).
 """
 
 from __future__ import annotations
@@ -86,7 +91,13 @@ def norm_rows(cols, kinds, rows):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(app_name="oracle-check", cores=8, shuffle_partitions=8)
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    spark = get_spark(
+        app_name="oracle-check",
+        cores=cores,
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     # kg_pages_e2e is sf-keyed (500 pages at the sf0.01 driver gate,
     # more at bench scale); the static ORACLES entry is its 500-page
     # twin. Regenerate the oracle at THIS run's page count so the local
@@ -136,6 +147,7 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     failures = []
+    summary = []  # (gate, status, rows, seconds)
     for name, fn in QUERIES.items():
         if only and name not in only:
             continue
@@ -147,10 +159,12 @@ def main():
             s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             failures.append(name)
+            summary.append((name, "FAIL", "-", time.time() - t0))
             print(f"FAIL  {name}: spark error: {e}")
             continue
         sql = oracles.get(name)
         if sql is None:
+            summary.append((name, "ROWS", len(s_rows), time.time() - t0))
             print(f"rows  {name}: {len(s_rows)} rows (no oracle) [{time.time()-t0:.1f}s]")
             continue
         try:
@@ -160,6 +174,7 @@ def main():
             d_rows = rel.fetchall()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
+            summary.append((name, "FAIL", len(s_rows), time.time() - t0))
             print(f"FAIL  {name}: duckdb error: {str(e).splitlines()[0]}")
             continue
         ok = True
@@ -183,10 +198,15 @@ def main():
                     diff_b = [r for r in b if r not in set(map(tuple, a))][:3]
                     print(f"FAIL  {name}: value mismatch; "
                           f"spark-only={diff_a} duck-only={diff_b}")
+        summary.append((name, "OK" if ok else "FAIL", len(s_rows), time.time() - t0))
         if ok:
             print(f"OK    {name}: {len(s_rows)} rows [{time.time()-t0:.1f}s]")
         else:
             failures.append(name)
+    width = max([len(g) for g, *_ in summary] + [4])
+    print(f"\n{'gate':<{width}}  status  {'rows':>8}  {'seconds':>8}")
+    for gate, status, rows, secs in summary:
+        print(f"{gate:<{width}}  {status:<6}  {rows:>8}  {secs:>8.1f}")
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
     sys.exit(1 if failures else 0)
 
