@@ -37,12 +37,7 @@ from typing import Any, Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from cartography_spark.store.graphstore import (
-    _COMMIT_RETRIES,
-    NODES_SCHEMA,
-    CommitConflict,
-    GraphStore,
-)
+from cartography_spark.store.graphstore import NODES_SCHEMA, GraphStore
 
 StepFn = Callable[[DataFrame, DataFrame, Mapping[str, Any]], tuple[DataFrame, DataFrame]]
 #: Returns the node labels a step can modify, given the FULL node/edge
@@ -242,10 +237,11 @@ class AnalysisJob:
     ) -> dict[str, Any]:
         params = dict(params or {})
         touches_edges = any(s.touches_edges for s in self.steps)
-        last: CommitConflict | None = None
-        for _ in range(_COMMIT_RETRIES):
+
+        def once() -> tuple[set | None, bool]:
+            """Read -> steps -> write -> stage, re-run whole on a
+            conflict by ``store._transact``."""
             self._observations = []
-            seq0 = store._seq()
             full_nodes, edges = store.read_nodes(), store.read_edges()
             touched = self._touched_labels(full_nodes, edges, params)
             manifest = store._manifest("nodes") or {"partitions": {}, "deletes": []}
@@ -311,47 +307,44 @@ class AnalysisJob:
                         **_evolution(emanifest, edges, ev),
                     },
                 )
+            if commits:
+                # ONE atomic commit for the whole job (the reference
+                # commits per statement; one commit keeps the rewrite
+                # atomic), published when the unit's transaction exits.
+                store._commit_manifests(commits)
+            return touched, "nodes" in commits
+
+        touched, nodes_written = store._transact(once)
+        # Per-statement counters (reference: GraphStatement counters
+        # harvested to statsd, ``graph/statement.py:105-120``) — the
+        # observations of the committed attempt materialized during its
+        # write, so this is the SAME pass, not extra jobs.
+        counters: dict[str, int] = {"steps": len(self.steps)}
+        if touched is not None:
+            counters["labels_touched"] = len(touched)
+        # Observation.get blocks until its plan executed — when no node
+        # write ran (zero touched labels) nothing matched.
+
+        def matched(obs) -> int:
             try:
-                if commits:
-                    # ONE atomic commit for the whole job (the reference
-                    # commits per statement; one commit keeps the
-                    # rewrite atomic), CAS'd against the snapshot seq.
-                    store._commit_manifests(commits, expected_seq=seq0)
-            except CommitConflict as e:
-                last = e
-                continue
-            # Per-statement counters (reference: GraphStatement counters
-            # harvested to statsd, ``graph/statement.py:105-120``) — the
-            # observations materialized during the write above, so this
-            # is the SAME pass, not extra jobs.
-            counters: dict[str, int] = {"steps": len(self.steps)}
-            if touched is not None:
-                counters["labels_touched"] = len(touched)
-            # Observation.get blocks until its plan executed — when no
-            # node write ran (zero touched labels) nothing matched.
-            nodes_written = "nodes" in commits
+                return int(obs.get.get("matched") or 0)
+            except Exception:
+                # an all-empty rewrite input lets AQE's empty-relation
+                # propagation eliminate the CollectMetrics node — the
+                # true count is then zero (nothing flowed through)
+                return 0
 
-            def matched(obs) -> int:
-                try:
-                    return int(obs.get.get("matched") or 0)
-                except Exception:
-                    # an all-empty rewrite input lets AQE's empty-relation
-                    # propagation eliminate the CollectMetrics node — the
-                    # true count is then zero (nothing flowed through)
-                    return 0
-
-            for name, obs in self._observations:
-                counters[name] = matched(obs) if nodes_written else 0
-            store._record_metrics(
-                f"analysis_{self.short_name or self.name}", update_tag, counters
-            )
-            return {
-                "job": self.name,
-                "steps": [s.name for s in self.steps],
-                "counters": counters,
-                "touched_labels": sorted(touched) if touched is not None else None,
-            }
-        raise last  # type: ignore[misc]
+        for name, obs in self._observations:
+            counters[name] = matched(obs) if nodes_written else 0
+        store._record_metrics(
+            f"analysis_{self.short_name or self.name}", update_tag, counters
+        )
+        return {
+            "job": self.name,
+            "steps": [s.name for s in self.steps],
+            "counters": counters,
+            "touched_labels": sorted(touched) if touched is not None else None,
+        }
 
     # ---------------- declarative (serialized) jobs ----------------
     #

@@ -50,20 +50,23 @@ key deleted then re-merged is NOT re-deleted at read time).
 - Every mutation writes a new manifest and atomically swaps the CURRENT
   pointer (os.replace) — snapshot isolation + time travel, which is
   what drift detection (§2.7 X2) and resume read.
-- Commits are OPTIMISTICALLY CONCURRENT: the pointer swap is a
-  compare-and-swap on the seq the mutation's snapshot was read at,
-  under a cross-process file lock; a losing writer gets
-  :class:`CommitConflict` and retries against the winner's snapshot,
-  so no commit is ever silently lost (Iceberg's commit protocol; the
-  reference gets this from Neo4j ACID transactions,
-  ``client/core/tx.py:178-213``). CURRENT carries a ``format`` field
-  (:data:`STORE_FORMAT`) so incompatible layouts fail fast.
-- :meth:`GraphStore.transaction` groups several mutations into ONE
-  commit: inside it every mutation stages its (version, manifest)
-  instead of swapping the pointer, reads see the staged manifests, and
-  the exit publishes everything with one CAS against the seq read at
-  entry — ``pipeline.sync.load`` is one transaction (node and edge
-  merges), the reference's one ``tx`` per load.
+- ONE commit protocol, optimistically concurrent (Iceberg's; the
+  reference gets the same guarantee from Neo4j ACID transactions,
+  ``client/core/tx.py:178-213``): every mutation runs inside a
+  :meth:`GraphStore.transaction`, which reads the pointer seq on
+  entry. Inside it mutations stage their (version, manifest) and reads
+  see what is staged; the exit publishes everything with one pointer
+  swap, a compare-and-swap on the entry seq under a cross-process file
+  lock. A losing writer gets :class:`CommitConflict` and publishes
+  nothing. A mutation that builds its inputs from the snapshot re-runs
+  whole against the winner's snapshot; one whose input plan came from
+  its caller lets the conflict surface, so no commit is ever silently
+  lost. A caller whose input reads the store opens the transaction
+  around that read: the mutations inside join it and never retry on
+  their own. ``pipeline.sync.load`` is one transaction (node and edge
+  merges), the reference's one ``tx`` per load. CURRENT carries a
+  ``format`` field (:data:`STORE_FORMAT`) so incompatible layouts fail
+  fast.
 
 On a real deployment both tables are Iceberg and ``merge_nodes`` is
 ``MERGE INTO nodes t USING s ON t.label=s.label AND t.id=s.id`` with
@@ -122,9 +125,10 @@ _COMMIT_RETRIES = 5
 
 
 class CommitConflict(Exception):
-    """Another writer committed between this writer's snapshot read and
-    its pointer swap (optimistic concurrency, Iceberg-style). Mutation
-    ops catch this and retry against the new current snapshot."""
+    """Another writer committed between this transaction's snapshot read
+    and its pointer swap (optimistic concurrency, Iceberg-style). A
+    mutation that builds its inputs from the snapshot re-runs against the
+    new current snapshot; otherwise the conflict reaches the caller."""
 
 
 class StoreFormatError(Exception):
@@ -364,15 +368,12 @@ class GraphStore:
 
     # ---------- version pointer / commit protocol ----------
     #
-    # Optimistic concurrency (Iceberg-style): a mutation reads the
-    # current pointer seq, builds its new data + manifest off-line, then
-    # commits under an exclusive file lock IF AND ONLY IF the seq is
-    # still the one it read (compare-and-swap). A concurrent commit in
-    # between raises :class:`CommitConflict` and the op retries against
-    # the new snapshot — no commit is ever silently last-wins-lost. The
-    # reference gets the same guarantee from Neo4j ACID transactions
-    # (``cartography/client/core/tx.py:178-213``). flock is per-fd, so
-    # the mutual exclusion holds across threads AND processes.
+    # Optimistic concurrency (Iceberg-style, see :meth:`transaction`):
+    # a mutation stages its new data + manifest off-line, and the
+    # transaction publishes under an exclusive file lock IF AND ONLY IF
+    # the pointer seq is still the one read at its entry
+    # (compare-and-swap). flock is per-fd, so the mutual exclusion holds
+    # across threads AND processes.
 
     @contextmanager
     def _commit_lock(self):
@@ -441,30 +442,27 @@ class GraphStore:
     def _txn(self) -> _Transaction | None:
         return _OPEN_TXNS.get().get(self)
 
-    def _seq(self) -> int:
-        """The snapshot seq a mutation builds on: the open transaction's,
-        else the pointer's. Read it BEFORE the manifest (see
-        ``_merge_cached``)."""
-        txn = self._txn()
-        return txn.seq if txn is not None else self._pointer().get("seq", 0)
-
     @contextmanager
     def transaction(self):
-        """Group mutations into one atomic commit (one pointer-seq bump).
+        """Group mutations into one atomic commit (one pointer-seq bump)
+        — the store's only commit protocol.
 
-        On entry the pointer seq is read. Inside, ``merge_nodes``,
-        ``merge_edges``, the sweeps' tombstone writes and every other
-        mutation of this store handle stage their (version, manifest)
-        instead of committing, and reads of this handle see what is
-        staged. On a normal exit everything staged is published with one
-        CAS against the entry seq, and the mutations' metrics rows are
-        appended; a transaction that staged nothing commits and records
-        nothing. If the body raises, nothing is published (the data
-        written so far is an orphan for ``expire_versions``). A
-        concurrent commit makes the exit raise :class:`CommitConflict`:
-        the caller re-runs the WHOLE unit against the new snapshot, as
-        ``pipeline.sync.load`` does. Opening a transaction inside an
-        open one (same handle) joins it.
+        On entry the pointer seq is read — before any manifest the body
+        reads, so a commit landing in between can only fail the exit's
+        CAS, never let a stale base publish. Inside, every mutation of
+        this store handle stages its (version, manifest), and reads of
+        this handle see what is staged. On a normal exit everything
+        staged is published with one CAS against the entry seq, and the
+        metrics rows recorded inside are appended; a transaction that
+        staged nothing commits and records nothing. If the body raises,
+        nothing is published (the data written so far is an orphan for
+        ``expire_versions``). A concurrent commit makes the exit raise
+        :class:`CommitConflict` and publish nothing: the caller rebuilds
+        its inputs from the new snapshot (``_transact`` re-runs a whole
+        unit). Opening a transaction inside an open one (same handle)
+        joins it, so a caller whose inputs read the store wraps the read
+        and the mutation in one transaction and the conflict surfaces at
+        its exit.
 
         Work may fan out to threads started by ``_concurrently``; two
         staged writes to the SAME table must not run concurrently (the
@@ -483,55 +481,49 @@ class GraphStore:
             self._append_metrics(txn.metrics)
 
     def _transact(self, unit: Callable[[], Any]) -> Any:
-        """Run ``unit`` inside one :meth:`transaction` and return its
-        result; when the commit meets a concurrent one, re-run the WHOLE
-        unit against the new snapshot, up to ``_COMMIT_RETRIES`` times.
-        Inside an open transaction the unit joins it, and a conflict
-        surfaces at that transaction's exit instead."""
-        last: CommitConflict | None = None
-        for _ in range(_COMMIT_RETRIES):
+        """Run ``unit`` — a whole read -> write -> stage sequence that
+        builds its inputs from the snapshot — inside one
+        :meth:`transaction` and return its result; when the commit meets
+        a concurrent one, re-run the WHOLE unit against the new
+        snapshot, up to ``_COMMIT_RETRIES`` times. Inside an open
+        transaction the unit joins it and never retries on its own: the
+        conflict surfaces at that transaction's exit."""
+        if self._txn() is not None:
+            return unit()
+        for _ in range(_COMMIT_RETRIES - 1):
             try:
                 with self.transaction():
                     return unit()
-            except CommitConflict as e:
-                last = e
-        raise last  # type: ignore[misc]
+            except CommitConflict:
+                pass
+        with self.transaction():
+            return unit()
 
-    def _commit_manifest(
-        self, table: str, version: str, manifest: dict, expected_seq: int | None = None
-    ) -> None:
-        """Write manifest then CAS-swap the pointer (write-then-publish:
-        readers of the old pointer never see a half-written manifest).
-        ``expected_seq`` is the pointer seq this mutation's snapshot was
-        read at; if another writer committed since, raises
-        :class:`CommitConflict` (nothing published — the data/manifest
-        files written so far are orphans for GC). Delete entries older
-        than every live partition prune away."""
-        self._commit_manifests({table: (version, manifest)}, expected_seq)
+    def _commit_manifest(self, table: str, version: str, manifest: dict) -> None:
+        """Stage one table's manifest into the open transaction."""
+        self._commit_manifests({table: (version, manifest)})
 
-    def _commit_manifests(
-        self, commits: dict[str, tuple[str, dict]], expected_seq: int | None = None
-    ) -> None:
-        """Atomically publish manifests for one or MORE tables in a
-        single CAS pointer swap — a multi-table transaction (the sweep
-        uses it so node tombstones and their DETACH edge tombstones
-        become visible together, like the reference's single
-        ``DETACH DELETE`` transaction). Inside an open
-        :meth:`transaction` the manifests are staged instead; a pinned
-        ``expected_seq`` other than the transaction's raises
-        :class:`CommitConflict` at once."""
+    def _commit_manifests(self, commits: dict[str, tuple[str, dict]]) -> None:
+        """Stage manifests for one or MORE tables into the open
+        :meth:`transaction`, which publishes them in a single CAS pointer
+        swap (the sweep stages node tombstones and their DETACH edge
+        tombstones together, like the reference's single ``DETACH
+        DELETE`` transaction). Staging outside a transaction is a
+        programming error."""
         txn = self._txn()
         if txn is None:
-            self._publish(commits, expected_seq)
-            return
-        if expected_seq is not None and expected_seq != txn.seq:
-            raise CommitConflict(
-                f"commit of {sorted(commits)}: built on seq {expected_seq}, the "
-                f"open transaction on seq {txn.seq} — retry from the new snapshot"
+            raise RuntimeError(
+                f"commit of {sorted(commits)} outside a transaction — run the "
+                "mutation under GraphStore.transaction() or _transact"
             )
         txn.staged.update(commits)
 
-    def _publish(self, commits: dict[str, tuple[str, dict]], expected_seq: int | None) -> None:
+    def _publish(self, commits: dict[str, tuple[str, dict]], expected_seq: int) -> None:
+        """Write the manifests, then CAS-swap the pointer against
+        ``expected_seq`` (write-then-publish: readers of the old pointer
+        never see a half-written manifest). Delete entries older than
+        every live partition prune away. Called only by
+        :meth:`transaction`."""
         for _, manifest in commits.values():
             parts = manifest["partitions"]
             manifest["deletes"] = [
@@ -543,7 +535,7 @@ class GraphStore:
             ]
         with self._commit_lock():
             cur = self._pointer()
-            if expected_seq is not None and cur.get("seq", 0) != expected_seq:
+            if cur.get("seq", 0) != expected_seq:
                 raise CommitConflict(
                     f"commit of {sorted(commits)}: pointer seq is "
                     f"{cur.get('seq', 0)}, expected {expected_seq} (concurrent "
@@ -865,41 +857,31 @@ class GraphStore:
                 parts[pval] = {"buckets": buckets}
         return parts
 
-    def _write(
-        self,
-        table: str,
-        df: DataFrame,
-        expected_seq: int | None = None,
-    ) -> str:
+    def _write(self, table: str, df: DataFrame) -> str:
         """Full-snapshot write: every partition fresh, tombstones folded
-        in (the compaction path). Raises :class:`CommitConflict` when
-        ``expected_seq`` is given and stale — the caller rebuilds ``df``
-        from the new snapshot and retries."""
-        old_man = self._manifest(table) or {}
-        v = self._allocate_version(table)
-        # A full snapshot rewrites every bucket, so it may RE-bucket to
-        # this store handle's n_buckets (the only layout-change path).
-        parts = self._write_data(table, v, df, self.n_buckets)
-        self._commit_manifest(
-            table,
-            v,
-            {
-                "partitions": parts,
-                "deletes": [],
-                "bucket_count": self.n_buckets,
-                **self._evolve_columns(old_man, df, v, restrict_to_df=True),
-            },
-            expected_seq,
-        )
-        return v
+        in (the compaction path), as one :meth:`_transact` unit."""
 
-    def replace_partitions(
-        self,
-        table: str,
-        df: DataFrame,
-        partitions: list[str],
-        expected_seq: int | None = None,
-    ) -> str:
+        def once() -> str:
+            old_man = self._manifest(table) or {}
+            v = self._allocate_version(table)
+            # A full snapshot rewrites every bucket, so it may RE-bucket to
+            # this store handle's n_buckets (the only layout-change path).
+            parts = self._write_data(table, v, df, self.n_buckets)
+            self._commit_manifest(
+                table,
+                v,
+                {
+                    "partitions": parts,
+                    "deletes": [],
+                    "bucket_count": self.n_buckets,
+                    **self._evolve_columns(old_man, df, v, restrict_to_df=True),
+                },
+            )
+            return v
+
+        return self._transact(once)
+
+    def replace_partitions(self, table: str, df: DataFrame, partitions: list[str]) -> str:
         """Partial rewrite: ``df`` is the complete new content of the
         named ``partitions``; every OTHER partition carries forward by
         manifest reference — zero copy (the same shape ``_merge`` uses;
@@ -910,33 +892,19 @@ class GraphStore:
         applying to the rewritten ones (whose content already folded
         them in at read time).
 
-        Commit is ALWAYS CAS'd: when the caller doesn't pin
-        ``expected_seq``, the pointer seq is read here (before the
-        manifest, same ordering rule as ``_merge_cached``) and a losing
-        race retries against the winner's manifest — an unguarded
-        default would publish carried-forward stale entries over a
-        concurrent merge's commit, silently losing it, and leave
-        CURRENT pointing at an older version than the newest manifest
-        (breaking ``expire_versions``' newest-is-current retention
-        premise). NOTE: ``df`` must be independent of the store's
-        current state (true for analysis-style rewrites computed from a
-        snapshot the caller owns); a caller whose df READ this table
-        should pass ``expected_seq`` so the conflict surfaces instead."""
-        pinned = expected_seq is not None
-        last: CommitConflict | None = None
-        for _ in range(_COMMIT_RETRIES):
-            seq0 = expected_seq if pinned else self._seq()
-            try:
-                return self._replace_partitions_once(table, df, partitions, seq0)
-            except CommitConflict as e:
-                if pinned:
-                    raise
-                last = e
-        raise last  # type: ignore[misc]
+        One :meth:`_transact` unit: a losing race re-runs against the
+        winner's manifest, so a concurrent merge's commit is never
+        overwritten by carried-forward stale entries. NOTE: ``df`` must
+        be independent of the store's current state (true for
+        analysis-style rewrites computed from a snapshot the caller
+        owns); a caller whose df READ the store opens
+        :meth:`transaction` around that read and this call, so the
+        conflict surfaces at its exit instead."""
+        return self._transact(
+            functools.partial(self._replace_partitions_once, table, df, partitions)
+        )
 
-    def _replace_partitions_once(
-        self, table: str, df: DataFrame, partitions: list[str], expected_seq: int
-    ) -> str:
+    def _replace_partitions_once(self, table: str, df: DataFrame, partitions: list[str]) -> str:
         manifest = self._manifest(table) or {"partitions": {}, "deletes": []}
         # A df omitting a DECLARED promoted column would write partition
         # files lacking it at seq >= columns_seq — reads would NULL-fill
@@ -967,7 +935,6 @@ class GraphStore:
                 "bucket_count": nb,
                 **self._evolve_columns(manifest, df, v),
             },
-            expected_seq,
         )
         return v
 
@@ -1034,8 +1001,30 @@ class GraphStore:
         updates: DataFrame,
         update_tag: int,
         partition_col: str,
-        expected_seq: int | None = None,
     ) -> dict[str, int]:
+        result = self._transact(
+            functools.partial(
+                self._merge_once, table, schema, key, updates, update_tag, partition_col
+            )
+        )
+        self._record_metrics(
+            f"merge_{table}",
+            update_tag,
+            {k: result[k] for k in ("rows_total", "created", "updated")},
+        )
+        return result
+
+    def _merge_once(
+        self,
+        table: str,
+        schema: T.StructType,
+        key: list[str],
+        updates: DataFrame,
+        update_tag: int,
+        partition_col: str,
+    ) -> dict[str, int]:
+        """One MERGE attempt inside its open transaction: dedupe and
+        observe the batch, read the touched buckets, write, stage."""
         managed = {"firstseen", "lastupdated"}
         new = self._dedupe(updates, key)
         for f in schema.fields:
@@ -1052,7 +1041,8 @@ class GraphStore:
         # plan — the row count, the NULL-key count and the touched
         # (partition value, bucket id) set, at most labels x bucket_count
         # entries, never row count — so no job runs just to plan.
-        nb = self._bucket_count(self._manifest(table))
+        manifest = self._manifest(table) or {"partitions": {}, "deletes": []}
+        nb = self._bucket_count(manifest)
         null_key = functools.reduce(operator.or_, [F.col(k).isNull() for k in key])
         obs = Observation()
         new = new.observe(
@@ -1079,160 +1069,106 @@ class GraphStore:
                 f"column(s) {key} — keys must be non-null"
             )
         if not steer["rows"]:
-            # Empty batch: a MERGE of nothing is a no-op — commit
-            # nothing (also: the write plan over an all-empty input
-            # would let AQE's empty-relation propagation eliminate
-            # the CollectMetrics node, breaking Observation.get).
-            counters = {"rows_total": 0, "created": 0, "updated": 0}
-            self._record_metrics(f"merge_{table}", update_tag, counters)
-            return {**counters, "version": self._pointer().get(table)}
+            # Empty batch: a MERGE of nothing is a no-op — stage nothing
+            # (also: the write plan over an all-empty input would let
+            # AQE's empty-relation propagation eliminate the
+            # CollectMetrics node, breaking Observation.get).
+            return {
+                "rows_total": 0, "created": 0, "updated": 0,
+                "version": self._pointer().get(table),
+            }
+        # Bucket pruning (round 5, VERDICT #1): only the (partition,
+        # bucket) groups containing the update's keys are read, merged,
+        # and rewritten; every other BUCKET carries forward by manifest
+        # reference.
         touched: dict[str, set] = {}
         for r in steer["touched"]:
             touched.setdefault(r["p"], set()).add(int(r["b"]))
-        return self._merge_cached(
-            table, schema, key, new, new_promoted, update_tag, partition_col,
-            (nb, touched), expected_seq=expected_seq,
+        promoted = sorted(set(manifest.get("columns", [])) | set(new_promoted))
+        cols = [f.name for f in schema.fields] + promoted
+        # Fail fast on a retype BEFORE the join coerces it silently:
+        # evolution adds columns, it never changes their type.
+        for c in new_promoted:
+            declared = manifest.get("columns_types", {}).get(c)
+            carried = new.schema[c].dataType.simpleString()
+            if declared is not None and declared != carried:
+                raise ValueError(
+                    f"promoted column {c} is declared {declared!r}; this "
+                    f"update carries {carried!r} — promoted columns are "
+                    f"never retyped"
+                )
+        old = self._read_manifest_df(
+            table,
+            schema,
+            manifest,
+            only_partitions=sorted(touched),
+            only_buckets=touched,
         )
-
-    def _merge_cached(
-        self,
-        table: str,
-        schema: T.StructType,
-        key: list[str],
-        new: DataFrame,
-        new_promoted: list[str],
-        update_tag: int,
-        partition_col: str,
-        observed: tuple[int, dict[str, set]],
-        expected_seq: int | None = None,
-    ) -> dict[str, int]:
-        last: CommitConflict | None = None
-        for _ in range(_COMMIT_RETRIES):
-            # Snapshot seq MUST be read before the manifest: a commit
-            # landing between the two reads then makes the manifest
-            # NEWER than the seq, so the CAS fails safe (retry) rather
-            # than publishing a merge built on a stale base. A caller
-            # whose UPDATES plan itself read the store (e.g. streaming's
-            # weight accumulation) passes expected_seq — its conflict
-            # must surface so it can rebuild that plan, not be retried
-            # here against the caller's stale inputs (round 4, ADVICE
-            # fix).
-            seq0 = expected_seq if expected_seq is not None else self._seq()
-            manifest = self._manifest(table) or {"partitions": {}, "deletes": []}
-            # Bucket pruning (round 5, VERDICT #1): only the (partition,
-            # bucket) groups containing the update's keys are read,
-            # merged, and rewritten; every other BUCKET carries forward
-            # by manifest reference. The touched set was observed at
-            # the bucket count the checkpoint saw; if a concurrent full
-            # compaction has since re-bucketed the table, the touched
-            # partitions are read and rewritten whole instead.
-            nb, touched = observed
-            if self._bucket_count(manifest) != nb:
-                nb = self._bucket_count(manifest)
-                touched = {p: set(range(nb)) for p in touched}
-            promoted = sorted(set(manifest.get("columns", [])) | set(new_promoted))
-            cols = [f.name for f in schema.fields] + promoted
-            # Fail fast on a retype BEFORE the join coerces it silently:
-            # evolution adds columns, it never changes their type.
-            for c in new_promoted:
-                declared = manifest.get("columns_types", {}).get(c)
-                carried = new.schema[c].dataType.simpleString()
-                if declared is not None and declared != carried:
-                    raise ValueError(
-                        f"promoted column {c} is declared {declared!r}; this "
-                        f"update carries {carried!r} — promoted columns are "
-                        f"never retyped"
-                    )
-            old = self._read_manifest_df(
-                table,
-                schema,
-                manifest,
-                only_partitions=sorted(touched),
-                only_buckets=touched,
+        for c in promoted:  # cols missing on one side: typed NULL
+            if c not in old.columns:
+                old = old.withColumn(c, F.lit(None).cast(new.schema[c].dataType))
+            if c not in new.columns:
+                new = new.withColumn(
+                    c, F.lit(None).cast(self._promoted_type(manifest, c))
+                )
+        v = self._allocate_version(table)
+        obs = Observation(f"merge_{table}_{v}")
+        result = (
+            merge_frames(old, new, key, cols, update_tag, with_flags=True)
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.col("__created").cast("long")).alias("created"),
+                F.sum(F.col("__updated").cast("long")).alias("updated"),
             )
-            for c in promoted:  # cols missing on one side: typed NULL
-                if c not in old.columns:
-                    old = old.withColumn(c, F.lit(None).cast(new.schema[c].dataType))
-                if c not in new.columns:
-                    new = new.withColumn(
-                        c, F.lit(None).cast(self._promoted_type(manifest, c))
-                    )
-            v = self._allocate_version(table)
-            obs = Observation(f"merge_{table}_{v}")
-            result = (
-                merge_frames(old, new, key, cols, update_tag, with_flags=True)
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum(F.col("__created").cast("long")).alias("created"),
-                    F.sum(F.col("__updated").cast("long")).alias("updated"),
-                )
-                .drop("__created", "__updated")
+            .drop("__created", "__updated")
+        )
+        evolution = self._evolve_columns(manifest, result, v)
+        # counters fold into this job
+        new_parts = self._write_data(table, v, result, nb)
+        # Bucket-granular manifest update: untouched buckets of a
+        # touched partition carry forward BY REFERENCE — their
+        # entries stay byte-identical across the merge.
+        parts = {
+            p: {"buckets": dict(i["buckets"])}
+            for p, i in manifest["partitions"].items()
+        }
+        for pval, pinfo in new_parts.items():
+            parts.setdefault(pval, {"buckets": {}})["buckets"].update(
+                pinfo["buckets"]
             )
-            evolution = self._evolve_columns(manifest, result, v)
-            # counters fold into this job
-            new_parts = self._write_data(table, v, result, nb)
-            # Bucket-granular manifest update: untouched buckets of a
-            # touched partition carry forward BY REFERENCE — their
-            # entries stay byte-identical across the merge.
-            parts = {
-                p: {"buckets": dict(i["buckets"])}
-                for p, i in manifest["partitions"].items()
-            }
-            for pval, pinfo in new_parts.items():
-                parts.setdefault(pval, {"buckets": {}})["buckets"].update(
-                    pinfo["buckets"]
-                )
-            try:
-                self._commit_manifest(
-                    table,
-                    v,
-                    {
-                        "partitions": parts,
-                        "deletes": list(manifest.get("deletes", [])),
-                        "bucket_count": nb,
-                        **evolution,
-                    },
-                    expected_seq=seq0,
-                )
-            except CommitConflict as e:
-                # Another writer won the race: re-merge against the new
-                # snapshot (the written data dir is an orphan for GC) —
-                # unless the caller pinned the snapshot, in which case
-                # only IT can rebuild its inputs.
-                if expected_seq is not None:
-                    raise
-                last = e
-                continue
-            got = obs.get
-            counters = {
-                "rows_total": int(got["rows"] or 0),
-                "created": int(got["created"] or 0),
-                "updated": int(got["updated"] or 0),
-            }
-            self._record_metrics(f"merge_{table}", update_tag, counters)
-            return {**counters, "version": v}
-        raise last  # type: ignore[misc]
+        self._commit_manifest(
+            table,
+            v,
+            {
+                "partitions": parts,
+                "deletes": list(manifest.get("deletes", [])),
+                "bucket_count": nb,
+                **evolution,
+            },
+        )
+        got = obs.get
+        return {
+            "rows_total": int(got["rows"] or 0),
+            "created": int(got["created"] or 0),
+            "updated": int(got["updated"] or 0),
+            "version": v,
+        }
 
     def merge_nodes(self, updates: DataFrame, update_tag: int) -> dict[str, int]:
         """Idempotent node upsert (U1). ``updates`` columns: label, id,
         [extra_labels, scope_id, props]."""
         return self._merge("nodes", NODES_SCHEMA, _NODE_KEY, updates, update_tag, "label")
 
-    def merge_edges(
-        self, updates: DataFrame, update_tag: int, expected_seq: int | None = None
-    ) -> dict[str, int]:
+    def merge_edges(self, updates: DataFrame, update_tag: int) -> dict[str, int]:
         """Idempotent edge upsert (U2), keyed (rel_label, src, dst).
 
-        ``expected_seq`` pins the CAS to a snapshot the CALLER read: a
-        conflict then raises CommitConflict instead of retrying
-        internally — required when ``updates`` was computed FROM the
-        store (read-modify-write), so the caller rebuilds its plan
-        against the winner's snapshot."""
-        return self._merge(
-            "edges", EDGES_SCHEMA, _EDGE_KEY, updates, update_tag, "rel_label",
-            expected_seq=expected_seq,
-        )
+        A conflict re-runs the merge against the winner's snapshot. When
+        ``updates`` was computed FROM the store (read-modify-write), the
+        caller opens :meth:`transaction` around that read and this call:
+        the merge joins it, and the conflict surfaces at its exit so the
+        caller rebuilds its plan against the winner's snapshot."""
+        return self._merge("edges", EDGES_SCHEMA, _EDGE_KEY, updates, update_tag, "rel_label")
 
     # ---------- merge-on-read deletes ----------
 
@@ -1240,8 +1176,8 @@ class GraphStore:
         self, table: str, keys: DataFrame
     ) -> tuple[int, str | None, dict | None]:
         """Write one tombstone key file and return the updated manifest
-        WITHOUT committing — the caller publishes (possibly for several
-        tables atomically) via ``_commit_manifests``. Returns
+        WITHOUT staging it — the caller stages it (possibly with other
+        tables, published atomically) via ``_commit_manifests``. Returns
         (rows_deleted, new_version, manifest). No data directory is
         touched — sweep cost is the key scan plus a key-sized write,
         independent of table size.
@@ -1285,17 +1221,17 @@ class GraphStore:
         return n, v, manifest
 
     def _write_deletes(self, table: str, keys: DataFrame) -> tuple[int, str | None]:
-        """Single-table tombstone write: prepare + one CAS commit. A
-        CommitConflict PROPAGATES instead of retrying here: the caller's
-        ``keys`` plan was built against the pre-conflict snapshot, so a
-        blind retry would tombstone rows a concurrent writer just
-        refreshed — the caller must recompute the doomed set from the
-        new snapshot (the sweep paths do exactly that)."""
-        seq0 = self._seq()
-        n, v, man = self._prepare_deletes(table, keys)
-        if n == 0:
-            return 0, None
-        self._commit_manifests({table: (v, man)}, expected_seq=seq0)
+        """Single-table tombstone write: prepare + stage in one
+        :meth:`transaction`, with no retry — the ``keys`` plan came
+        from the caller, so a blind re-run would tombstone rows a
+        concurrent writer just refreshed. A CommitConflict surfaces at
+        the transaction's exit and the caller recomputes the doomed set
+        from the new snapshot (the sweep paths run their whole read and
+        write as one ``_transact`` unit instead)."""
+        with self.transaction():
+            n, v, man = self._prepare_deletes(table, keys)
+            if n:
+                self._commit_manifest(table, v, man)
         return n, v
 
     # ---------- cleanup sweep (C1-C6) ----------
@@ -1562,10 +1498,11 @@ class GraphStore:
         max_seq_groups: int | None = None,
     ) -> dict[str, str]:
         """Consolidate read-plan fragmentation. Two criteria, both
-        CAS-committed with retry like compaction; tombstones fold into
-        whatever is rewritten (the new seq postdates them) and keep
-        applying to untouched entries; entries dead everywhere are
-        pruned at commit.
+        applied in one :meth:`_transact` unit like compaction (a
+        concurrent commit re-runs the defrag against the winner's
+        snapshot); tombstones fold into whatever is rewritten (the new
+        seq postdates them) and keep applying to untouched entries;
+        entries dead everywhere are pruned at commit.
 
         ``max_seq_spread``: every partition whose buckets span more
         than this many distinct seqs is rewritten WHOLE (all its
@@ -1586,9 +1523,8 @@ class GraphStore:
         the 100 TB-hostile shape the bucketed merge removed). Post-
         defrag count is <= ``max_seq_groups`` (kept seqs + the one
         fresh seq); rewrite cost tracks minority-seq bytes."""
-        last: CommitConflict | None = None
-        for _ in range(_COMMIT_RETRIES):
-            seq0 = self._seq()
+
+        def once() -> dict[str, str]:
             manifest = self._manifest(table)
             if manifest is None:
                 return {}
@@ -1669,30 +1605,27 @@ class GraphStore:
             for p, i in new_parts.items():
                 if p in affected_set:
                     merged[p] = i  # fully-tombstoned partitions drop out
-            try:
-                self._commit_manifest(
-                    table,
-                    v,
-                    {
-                        "partitions": merged,
-                        "deletes": list(manifest.get("deletes", [])),
-                        "bucket_count": nb,
-                        **self._evolve_columns(manifest, df, v),
-                    },
-                    expected_seq=seq0,
-                )
-            except CommitConflict as e:
-                last = e
-                continue
+            self._commit_manifest(
+                table,
+                v,
+                {
+                    "partitions": merged,
+                    "deletes": list(manifest.get("deletes", [])),
+                    "bucket_count": nb,
+                    **self._evolve_columns(manifest, df, v),
+                },
+            )
             return {table: v}
-        raise last  # type: ignore[misc]
+
+        return self._transact(once)
 
     def compact(self, table: str | None = None, full: bool = False) -> dict[str, str]:
         """Fold tombstones into rewritten data (Iceberg
         rewrite_data_files + rewrite_position_delete_files analog). Run
-        periodically, off the sync critical path. CAS-committed: a
-        concurrent mutation wins and the compaction re-reads the new
-        snapshot (never clobbers a racing merge/sweep).
+        periodically, off the sync critical path. One :meth:`_transact`
+        unit, and so one commit, per table: a concurrent mutation wins
+        and the compaction re-runs against the new snapshot (never
+        clobbers a racing merge/sweep).
 
         Default is PARTITION-SCOPED (the only shape that survives
         100 TB): each tombstone entry records the partitions its keys
@@ -1703,31 +1636,23 @@ class GraphStore:
         Compaction cost tracks tombstone-touched partitions, not table
         size. ``full=True`` forces the legacy whole-table snapshot
         (also re-sorts untouched partitions)."""
+
+        def once(t: str) -> str | None:
+            manifest = self._manifest(t)
+            if manifest is None:
+                return None
+            if full:
+                return self._write(t, self._read(t, _SCHEMA[t]))
+            return self._compact_partial(t, manifest)
+
         out: dict[str, str] = {}
         for t in [table] if table else ["nodes", "edges"]:
-            last: CommitConflict | None = None
-            for _ in range(_COMMIT_RETRIES):
-                seq0 = self._seq()
-                manifest = self._manifest(t)
-                if manifest is None:
-                    break
-                try:
-                    if full:
-                        out[t] = self._write(
-                            t, self._read(t, _SCHEMA[t]), expected_seq=seq0
-                        )
-                    else:
-                        v = self._compact_partial(t, manifest, seq0)
-                        if v is not None:
-                            out[t] = v
-                    break
-                except CommitConflict as e:
-                    last = e
-            else:
-                raise last  # type: ignore[misc]
+            v = self._transact(functools.partial(once, t))
+            if v is not None:
+                out[t] = v
         return out
 
-    def _compact_partial(self, table: str, manifest: dict, seq0: int) -> str | None:
+    def _compact_partial(self, table: str, manifest: dict) -> str | None:
         """One bucket-scoped compaction pass against ``manifest``.
         Returns the new version, or None when nothing needed doing.
         Rewrite unit = the (partition, bucket) groups some tombstone can
@@ -1779,7 +1704,6 @@ class GraphStore:
                 table,
                 v,
                 {**manifest, "deletes": kept},
-                expected_seq=seq0,
             )
             return v
         # deletes fold in at read time for the affected buckets
@@ -1813,6 +1737,5 @@ class GraphStore:
                 "bucket_count": nb,
                 **self._evolve_columns(manifest, df, v),
             },
-            expected_seq=seq0,
         )
         return v

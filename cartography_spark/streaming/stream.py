@@ -272,21 +272,16 @@ def stream_to_store(
         # (round 5 — the same bucket discipline the merge itself uses),
         # not the whole edge table per micro-batch. The distinct is over
         # (pred, bucket) — at most rels x bucket_count rows.
-        from cartography_spark.store.graphstore import (
-            _COMMIT_RETRIES,
-            EDGES_SCHEMA,
-            CommitConflict,
-        )
+        from cartography_spark.store.graphstore import EDGES_SCHEMA
 
-        # The accumulation is a read-modify-write: ``prev`` resolves the
-        # edges manifest at PLAN-BUILD time, so a concurrent writer
-        # committing between our read and our merge would be silently
-        # overwritten if the merge retried internally with this stale
-        # plan. Pin the snapshot seq into the merge CAS and REBUILD the
-        # whole read+plan on conflict (round 4, ADVICE fix).
-        last_conflict: CommitConflict | None = None
-        for _ in range(_COMMIT_RETRIES):
-            seq0 = store._seq()
+        def merge_weighted_edges() -> dict[str, int]:
+            # The accumulation is a read-modify-write: ``prev`` resolves
+            # the edges manifest at PLAN-BUILD time, so read and merge
+            # run as ONE store transaction unit — ``merge_edges`` joins
+            # it, and a concurrent writer committing between the read
+            # and the merge makes the unit re-run whole against the
+            # winner's snapshot instead of being overwritten (round 4,
+            # ADVICE fix).
             eman = store._manifest("edges")
             # bucket count re-read per retry (a concurrent full
             # compaction may have re-bucketed). The bucket expression is
@@ -343,13 +338,9 @@ def stream_to_store(
                     ).alias("props"),
                 )
             )
-            try:
-                e = store.merge_edges(edges, update_tag, expected_seq=seq0)
-                break
-            except CommitConflict as ex:
-                last_conflict = ex
-        else:
-            raise last_conflict  # type: ignore[misc]
+            return store.merge_edges(edges, update_tag)
+
+        e = store._transact(merge_weighted_edges)
         store._record_metrics(
             "stream_epoch",
             update_tag,

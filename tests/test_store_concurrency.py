@@ -28,19 +28,19 @@ def _nodes_df(spark, rows):
 
 
 def test_cas_rejects_stale_commit(spark, tmp_path):
-    """A commit whose expected seq is no longer current must raise
-    CommitConflict and publish NOTHING (pointer and manifest set
+    """A transaction whose entry seq is no longer current at exit must
+    raise CommitConflict and publish NOTHING (pointer and manifest set
     unchanged for the winner)."""
     root = str(tmp_path / "g")
     a = GraphStore(spark, root)
     b = GraphStore(spark, root)
     a.merge_nodes(_nodes_df(spark, [("A", "a1", None, {})]), 1)
-    stale_seq = a._pointer()["seq"]
-    b.merge_nodes(_nodes_df(spark, [("B", "b1", None, {})]), 1)  # B wins the race
-    man = a._manifest("nodes")
-    v = a._allocate_version("nodes")
     with pytest.raises(CommitConflict):
-        a._commit_manifest("nodes", v, man, expected_seq=stale_seq)
+        with a.transaction():
+            man = a._manifest("nodes")
+            v = a._allocate_version("nodes")
+            a._commit_manifest("nodes", v, man)
+            b.merge_nodes(_nodes_df(spark, [("B", "b1", None, {})]), 1)  # B wins the race
     # the loser published nothing: pointer still B's commit
     assert set(a._manifest("nodes")["partitions"]) == {"A", "B"}
 
@@ -148,6 +148,68 @@ def test_concurrent_merge_and_sweep(spark, tmp_path):
     assert out["nodes_deleted"] == 1
     ids = sorted(r["id"] for r in a.read_nodes().where("label='User'").collect())
     assert ids == ["u1"]
+
+
+def test_compact_reruns_on_concurrent_merge(spark, tmp_path):
+    """compact is one transaction unit: a merge committing after the
+    compaction wrote its data fails the compaction's CAS, the whole
+    compaction re-runs against the merged snapshot, the racing row
+    survives and the tombstones still fold."""
+    root = str(tmp_path / "g")
+    a = GraphStore(spark, root, n_buckets=4)
+    b = GraphStore(spark, root, n_buckets=4)
+    a.merge_nodes(_nodes_df(spark, [("P", f"p{i}", None, {}) for i in range(20)]), 1)
+    a._write_deletes(
+        "nodes", spark.createDataFrame([("P", f"p{i}") for i in range(5)], "label string, id string")
+    )
+
+    orig = a._write_data
+    calls = {"n": 0}
+
+    def hook(table, version, df, *args, **kwargs):
+        out = orig(table, version, df, *args, **kwargs)
+        calls["n"] += 1
+        if calls["n"] == 1:
+            b.merge_nodes(_nodes_df(spark, [("P", "race", None, {})]), 2)
+        return out
+
+    a._write_data = hook
+    assert set(a.compact("nodes")) == {"nodes"}
+    assert calls["n"] == 2  # the compaction ran twice
+    ids = {r["id"] for r in a.read_nodes().collect()}
+    assert ids == {f"p{i}" for i in range(5, 20)} | {"race"}
+    assert a._manifest("nodes")["deletes"] == []
+
+
+def test_analysis_job_reruns_on_concurrent_merge(spark, tmp_path):
+    """An analysis job's read -> steps -> write is one transaction unit:
+    a merge committing while the job runs makes the whole job re-run
+    against the merged snapshot, so the racing row survives (and is
+    rewritten by the re-run's steps)."""
+    from pyspark.sql import functions as F
+
+    from cartography_spark.pipeline.analysis import AnalysisJob
+
+    root = str(tmp_path / "g")
+    a = GraphStore(spark, root, n_buckets=4)
+    b = GraphStore(spark, root, n_buckets=4)
+    a.merge_nodes(_nodes_df(spark, [("X", "x1", None, {}), ("Y", "y1", None, {})]), 1)
+    calls = {"n": 0}
+
+    def tag(nodes, edges, params):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            b.merge_nodes(_nodes_df(spark, [("X", "race", None, {})]), 2)
+        props = F.map_concat(F.col("props"), F.create_map(F.lit("tagged"), F.lit("1")))
+        return nodes.withColumn("props", props), edges
+
+    out = AnalysisJob("tag x").add_step("tag", tag, labels=["X"], touches_edges=False).run(a, 3)
+    assert out["touched_labels"] == ["X"]
+    assert calls["n"] == 2  # the job's steps ran twice
+    rows = {r["id"]: r["props"] for r in a.read_nodes().collect()}
+    assert set(rows) == {"x1", "y1", "race"}
+    assert rows["x1"]["tagged"] == "1" and rows["race"]["tagged"] == "1"
+    assert "tagged" not in rows["y1"]
 
 
 def test_store_format_version_guard(spark, tmp_path):

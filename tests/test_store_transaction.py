@@ -149,6 +149,23 @@ def test_transaction_exit_conflict_raises(spark, store):
     assert {r["label"] for r in store.read_nodes().collect()} == {"Tenant", "B"}
 
 
+def test_read_then_replace_in_transaction_surfaces_conflict(spark, store):
+    """A caller whose rewrite reads the store opens a transaction around
+    the read and the mutation: a commit landing in between makes the
+    exit raise CommitConflict, and the rewrite publishes nothing."""
+    other = GraphStore(spark, store.root, n_buckets=4)
+    seq0 = _seq(store)
+    before = store.read_nodes().where("label = 'Tenant'").collect()
+    with pytest.raises(CommitConflict):
+        with store.transaction():
+            df = store.read_nodes().where("label = 'Tenant'").withColumn("scope_id", F.lit("s"))
+            other.merge_nodes(spark.createDataFrame([("B", "b1")], "label string, id string"), 5)
+            store.replace_partitions("nodes", df, ["Tenant"])
+    assert _seq(store) == seq0 + 1  # only the other handle's commit
+    assert store.read_nodes().where("label = 'Tenant'").collect() == before
+    assert {r["label"] for r in store.read_nodes().collect()} == {"Tenant", "B"}
+
+
 def test_self_referencing_rel_matches_sequential_merges(spark, tmp_path):
     """Page LINKS_TO Page whose targets are created by the same batch:
     the edges equal those of a node merge followed by an edge merge."""

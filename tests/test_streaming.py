@@ -368,23 +368,25 @@ def test_stream_to_store_epoch_replay_is_no_op(spark, tmp_path):
     assert store.read_edges().collect()[0]["props"]["n"] == "3"  # no double-add
 
 
-def test_merge_edges_expected_seq_surfaces_conflict(spark, tmp_path):
-    """Round-4 ADVICE fix, store side: merge_edges with a pinned
-    expected_seq must RAISE CommitConflict when the snapshot moved,
-    instead of retrying internally against the caller's stale inputs."""
+def test_merge_edges_in_transaction_surfaces_conflict(spark, tmp_path):
+    """Round-4 ADVICE fix, store side: merge_edges inside a caller's
+    transaction must let CommitConflict surface at its exit when the
+    snapshot moved, instead of retrying internally against the
+    caller's stale inputs."""
     from cartography_spark.store.graphstore import CommitConflict, GraphStore
 
     store = GraphStore(spark, str(tmp_path / "g"))
+    other = GraphStore(spark, str(tmp_path / "g"))
     e1 = spark.createDataFrame(
         [("R", "a", "b", "X", "X", None, {"n": "1"})],
         "rel_label string, src string, dst string, src_label string, "
         "dst_label string, scope_id string, props map<string,string>",
     )
     store.merge_edges(e1, 100)
-    stale_seq = store._pointer().get("seq", 0)
-    store.merge_edges(e1, 101)  # snapshot moves past stale_seq
     with pytest.raises(CommitConflict):
-        store.merge_edges(e1, 102, expected_seq=stale_seq)
+        with store.transaction():
+            other.merge_edges(e1, 101)  # snapshot moves past the entry seq
+            store.merge_edges(e1, 102)
 
 
 def test_stream_weight_rebuilds_plan_on_concurrent_writer(spark, tmp_path):
@@ -419,7 +421,7 @@ def test_stream_weight_rebuilds_plan_on_concurrent_writer(spark, tmp_path):
     orig = store.merge_edges
     state = {"injected": False}
 
-    def racing(updates, update_tag, expected_seq=None):
+    def racing(updates, update_tag):
         if not state["injected"]:
             state["injected"] = True
             other = GraphStore(spark, str(tmp_path / "graph"))
@@ -431,7 +433,7 @@ def test_stream_weight_rebuilds_plan_on_concurrent_writer(spark, tmp_path):
                 ),
                 60,
             )
-        return orig(updates, update_tag, expected_seq=expected_seq)
+        return orig(updates, update_tag)
 
     store.merge_edges = racing
     try:
