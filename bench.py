@@ -60,8 +60,7 @@ FLAGSHIP_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "500000"))
 
 def dedup_minhash_lsh_prod(spark, sf_dir):
     """Production LSH config: arrow family (vectorized signature fold +
-    memoized-set Jaccard verify over Arrow batches — measured 2.4x the
-    xxhash64 family, pair-and-value identical at sf0.1), 4-row bands
+    memoized-set Jaccard verify over Arrow batches), 4-row bands
     (candidate rate j^4, not j^2), bounded buckets. The catalog's
     md5/2-row variant exists for oracle parity, not throughput."""
     from cartography_spark.operators.dedup import minhash_lsh_pairs
@@ -82,7 +81,7 @@ def dedup_simhash_prod(spark, sf_dir):
     from cartography_spark.operators.dedup import simhash_pairs
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return simhash_pairs(docs, "doc_id", "text", shingle_n=3, max_hamming=3, engine="arrow2")
+    return simhash_pairs(docs, "doc_id", "text", shingle_n=3, max_hamming=3)
 
 
 def kg_cc_cooccurrence(spark, sf_dir):
@@ -152,8 +151,8 @@ def run_flagship(spark, n_pages: int) -> dict:
 
     The deterministic page generator is test scaffolding, not the
     engine, so pages are MATERIALIZED to parquet first (the Iceberg
-    pages-table stand-in, same methodology as scripts/bench_scaling.py)
-    and only the read->extract->triples->agg pipeline is timed."""
+    pages-table stand-in) and only the read->extract->triples->agg
+    pipeline is timed."""
     import shutil
     import tempfile
 

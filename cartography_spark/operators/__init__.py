@@ -1,9 +1,4 @@
-from cartography_spark.operators.linking import (
-    lsh_blocked_join,
-    matcher_join,
-    minhash_signature,
-    ngram_shingles,
-)
+from cartography_spark.operators.linking import matcher_join
 from cartography_spark.operators.components import (
     canonicalize,
     connected_components,
@@ -17,7 +12,6 @@ from cartography_spark.operators.dedup import (
     minhash_lsh_join,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash,
     simhash_pairs,
 )
 from cartography_spark.operators.drift import node_drift, state_diff
@@ -37,10 +31,10 @@ from cartography_spark.operators.similarity import (
 )
 
 __all__ = [
-    "matcher_join", "lsh_blocked_join", "ngram_shingles", "minhash_signature",
+    "matcher_join",
     "connected_components", "canonicalize",
     "exact_dedup_groups", "drop_exact_duplicates", "minhash_lsh_pairs", "minhash_lsh_join",
-    "ngram_jaccard_pairs", "simhash", "simhash_pairs", "embedding_near_dup_pairs",
+    "ngram_jaccard_pairs", "simhash_pairs", "embedding_near_dup_pairs",
     "state_diff", "node_drift", "group_star_edges", "embedding_near_dup_lsh",
     "State", "get_query_state", "load_state", "add_shortcut", "perform_drift_detection",
     "hop", "expand", "reach_fixpoint", "match_path_2hop",

@@ -5,16 +5,17 @@ bucket-join), SimHash (Hamming-blocked), n-gram Jaccard, and
 embedding-cosine near-dup — each returning either surviving rows or
 confirmed duplicate pairs.
 
-Three hash families:
-- ``family="md5"`` — md5 hex strings, byte-identical in DuckDB, used
-  wherever the driver's SQL oracle must reproduce the result;
-- ``family="xxhash64"`` — Spark's JVM xxhash64, ~6x faster (no hex
-  materialization);
-- ``family="arrow"`` — the production path: signature fold AND exact
-  Jaccard verify vectorized over Arrow batches
+One oracle-parity kernel and one production kernel per job:
+- MinHash-LSH: ``family="md5"`` — md5 hex strings, byte-identical in
+  DuckDB, used wherever the driver's SQL oracle must reproduce the
+  result; ``family="arrow"`` (the default) — the production path:
+  signature fold AND exact Jaccard verify vectorized over Arrow batches
   (:func:`minhash_signatures_arrow`, :func:`_jaccard_verify_arrow`);
-  measured 2.4x the xxhash64 family at sf0.1 with identical pair+value
-  output on the synthetic corpus.
+- SimHash: :func:`simhash_pairs` (64-bit fingerprints folded in one
+  Arrow pass) and its oracle twin :func:`simhash_pairs_md5` (32-bit md5
+  family);
+- bottom-k containment: ``family="md5"`` (oracle) or ``"xxhash64"``
+  (production).
 
 Reference analog: A2 dedup-by-key (``cartography/intel/github/
 users.py:132-185``) and the fuzzy matcher J4 (``cartography/graph/
@@ -85,29 +86,19 @@ def drop_exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFram
 # ---------------- MinHash + LSH ----------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int, family: str = "xxhash64") -> Column:
-    """minhash_i = min over shingles of h_i(shingle); h_i = seeded
-    xxhash64 (prod) or md5 of "i:shingle" (oracle-portable strings).
+def minhash_signature(shingles: Column, num_hashes: int) -> Column:
+    """minhash_i = min over shingles of md5("i:shingle") — the md5
+    family, as hex strings a DuckDB oracle reproduces byte for byte.
 
     IMPORTANT: pass ``shingles`` as a *materialized column reference*
     (stage the shingle array in its own projection first). Higher-order
     lambdas are interpreted (no codegen CSE), so an inline expression
     here would be recomputed ``num_hashes`` times per row."""
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    if family == "xxhash64":
-        return F.transform(
-            idx, lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(i, s))).cast("string")
-        )
-    if family == "md5":
-        return F.transform(
-            idx,
-            lambda i: F.array_min(
-                F.transform(shingles, lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)))
-            ),
-        )
-    raise ValueError(
-        f"unknown expression-level hash family {family!r} "
-        "(the 'arrow' family is frame-level: minhash_signatures_arrow)"
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        lambda i: F.array_min(
+            F.transform(shingles, lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)))
+        ),
     )
 
 
@@ -153,7 +144,7 @@ def minhash_signatures_arrow(
     (multiply-shift hashing — public construction). Signed int64
     comparison keeps min semantics identical to a JVM long twin.
 
-    This is a DIFFERENT hash family from ``xxhash64``/``md5`` (own
+    This is a DIFFERENT hash family from ``md5`` (own
     ``family="arrow"``): LSH candidate sets differ w.h.p.-negligibly,
     and the downstream exact-Jaccard verify is engine-independent, so
     pair outputs agree at the same recall bars. Not used by
@@ -214,8 +205,8 @@ def _jaccard_verify_arrow(
     set intersection over ~300-element sets is ~5µs/pair — far below
     one interpreted array_intersect. NULL text ⇒ NULL jaccard, matching
     the JVM path (the threshold filter then drops the pair). Rounding
-    and thresholding stay JVM-side so HALF_UP semantics match the other
-    families exactly."""
+    and thresholding stay JVM-side so HALF_UP semantics match the md5
+    family exactly."""
     import pandas as pd
 
     out_cols = [c for c in pairs.columns if c not in (ta, tb)]
@@ -266,6 +257,92 @@ def _band_hashes(sig: Column, bands: int, rows_per_band: int, family: str) -> Co
     return F.array(*[band_key(b) for b in range(bands)])
 
 
+def _minhash_bands(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    out_id: str,
+    shingle_n: int,
+    num_hashes: int,
+    bands: int,
+    family: str,
+) -> DataFrame:
+    """(out_id, band_key): one row per LSH band of each doc's MinHash
+    signature in ``family`` — ``"arrow"`` (production) or ``"md5"``
+    (oracle parity)."""
+    if num_hashes % bands:
+        raise ValueError("num_hashes must be divisible by bands")
+    if family == "arrow":
+        # vectorized mapInPandas signature fold (same output contract)
+        staged = minhash_signatures_arrow(df, id_col, text_col, num_hashes, shingle_n)
+    elif family == "md5":
+        # Expression-level let-binding: wrap the shingle array in a
+        # 1-element array and bind it via a transform lambda variable, so
+        # the signature's num_hashes lambdas read a COMPUTED value, not
+        # the char_shingles expression (an outer-lambda body is evaluated
+        # per element — an inlined shingle expression would re-tokenize
+        # the text 32x per row, measured 10x slower). The __sig attribute
+        # is then multiply-referenced by the band keys, which keeps
+        # CollapseProject from inlining it in turn.
+        staged = df.select(
+            F.col(id_col).alias("doc_id"),
+            F.element_at(
+                F.transform(
+                    F.array(char_shingles(text_col, shingle_n)),
+                    lambda sh: minhash_signature(sh, num_hashes),
+                ),
+                1,
+            ).alias("__sig"),
+        )
+    else:
+        raise ValueError(f"unknown MinHash family {family!r} (expected 'arrow' or 'md5')")
+    return staged.withColumnRenamed("doc_id", out_id).select(
+        out_id,
+        F.explode(_band_hashes(F.col("__sig"), bands, num_hashes // bands, family)).alias(
+            "band_key"
+        ),
+    )
+
+
+def _verified_pairs(
+    bare: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    text_col: str,
+    id_a: str,
+    id_b: str,
+    shingle_n: int,
+    threshold: float,
+    family: str,
+) -> DataFrame:
+    """Exact n-gram Jaccard verify of deduped BARE id pairs
+    ``(id_a from left, id_b from right)``: the payload re-attaches via
+    two equi-joins hinted SHUFFLE_HASH (auto-broadcast would ship the
+    payload to every task — measured 10x slower even at sf0.1).
+    Columns: id_a, id_b, jaccard (4dp, >= threshold)."""
+
+    def side(df: DataFrame, out_id: str, payload: Column) -> DataFrame:
+        return df.select(F.col(id_col).alias(out_id), payload).hint("shuffle_hash")
+
+    if family == "arrow":
+        # Arrow verify: re-attach raw TEXT (1x-text payload, vs ~3x for
+        # materialized shingle arrays) and fold Jaccard per batch with
+        # per-doc memoized shingle sets.
+        pairs = bare.join(side(left, id_a, F.col(text_col).alias("__t_a")), id_a).join(
+            side(right, id_b, F.col(text_col).alias("__t_b")), id_b
+        )
+        out = _jaccard_verify_arrow(pairs, "__t_a", "__t_b", shingle_n, threshold)
+    else:
+        pairs = bare.join(
+            side(left, id_a, char_shingles(text_col, shingle_n).alias("__sh_a")), id_a
+        ).join(side(right, id_b, char_shingles(text_col, shingle_n).alias("__sh_b")), id_b)
+        out = pairs.withColumn(
+            "jaccard", F.round(jaccard(F.col("__sh_a"), F.col("__sh_b")), 4)
+        ).where(F.col("jaccard") >= threshold)
+    return out.select(id_a, id_b, "jaccard")
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -274,49 +351,17 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.7,
-    family: str = "xxhash64",
+    family: str = "arrow",
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Confirmed near-duplicate pairs (id_a < id_b, jaccard >= threshold).
 
     shingle → minhash → band → self-equi-join on band key → pair dedup
     → exact-Jaccard verify. Columns: id_a, id_b, jaccard (double,
-    rounded 4dp for oracle hashing).
+    rounded 4dp for oracle hashing). ``family``: ``"arrow"``
+    (production) or ``"md5"`` (oracle parity).
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    rpb = num_hashes // bands
-    # Expression-level let-binding: wrap the shingle array in a 1-element
-    # array and bind it via a transform lambda variable, so the signature's
-    # num_hashes lambdas read a COMPUTED value, not the char_shingles
-    # expression (an outer-lambda body is evaluated per element — an
-    # inlined shingle expression would re-tokenize the text 32x per row,
-    # measured 10x slower). The __sig attribute is then multiply-
-    # referenced by the band keys, which keeps CollapseProject from
-    # inlining it in turn. The "arrow" family replaces this whole stage
-    # with the vectorized mapInPandas engine (same output contract).
-    if family == "arrow":
-        staged = minhash_signatures_arrow(df, id_col, text_col, num_hashes, shingle_n)
-    else:
-        staged = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.element_at(
-                F.transform(
-                    F.array(char_shingles(text_col, shingle_n)),
-                    lambda sh: minhash_signature(sh, num_hashes, family),
-                ),
-                1,
-            ).alias("__sig"),
-        )
-    # Shingles-only projection for the post-dedup re-join (NOT derived
-    # from `staged`: that branch would re-run the minhash fold too).
-    sh_store = df.select(
-        F.col(id_col).alias("doc_id"), char_shingles(text_col, shingle_n).alias("shingles")
-    )
-    base = staged.select(
-        "doc_id",
-        F.explode(_band_hashes(F.col("__sig"), bands, rpb, family)).alias("band_key"),
-    )
+    base = _minhash_bands(df, id_col, text_col, "doc_id", shingle_n, num_hashes, bands, family)
     # bound bucket blowup from hot band keys (see module docstring)
     sized = base.withColumn("__bs", F.count("*").over(Window.partitionBy("band_key")))
     bounded = sized.where(F.col("__bs") <= max_bucket).drop("__bs")
@@ -331,46 +376,15 @@ def minhash_lsh_pairs(
     # the explicit barrier.
     b = bounded.select(F.col("doc_id").alias("doc_id_b"), F.col("band_key"))
     # Dedup BARE id pairs (a pair can collide in several bands), THEN
-    # re-attach the payload via two equi-joins — the dedup shuffle
-    # carries ids only. The re-joins are hinted SHUFFLE_HASH:
-    # auto-broadcast would ship the payload to every task — measured
-    # 10x slower even at sf0.1.
+    # re-attach the payload — the dedup shuffle carries ids only.
     bare = (
         bounded.join(b, "band_key")
         .where(F.col("doc_id") < F.col("doc_id_b"))
         .select(F.col("doc_id").alias("id_a"), F.col("doc_id_b").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    if family == "arrow":
-        # Arrow verify: re-attach raw TEXT (1x-text payload, vs ~3x for
-        # materialized shingle arrays) and fold Jaccard per batch with
-        # per-doc memoized shingle sets.
-        txt = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
-        pairs = bare.join(
-            txt.select(F.col("doc_id").alias("id_a"), F.col("__t").alias("__t_a"))
-            .hint("shuffle_hash"),
-            "id_a",
-        ).join(
-            txt.select(F.col("doc_id").alias("id_b"), F.col("__t").alias("__t_b"))
-            .hint("shuffle_hash"),
-            "id_b",
-        )
-        return _jaccard_verify_arrow(pairs, "__t_a", "__t_b", shingle_n, threshold).select(
-            "id_a", "id_b", "jaccard"
-        )
-    pairs = bare.join(
-        sh_store.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-        .hint("shuffle_hash"),
-        "id_a",
-    ).join(
-        sh_store.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-        .hint("shuffle_hash"),
-        "id_b",
-    )
-    return (
-        pairs.withColumn("jaccard", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 4))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _verified_pairs(
+        bare, df, df, id_col, text_col, "id_a", "id_b", shingle_n, threshold, family
     )
 
 
@@ -383,7 +397,7 @@ def minhash_lsh_join(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.7,
-    family: str = "xxhash64",
+    family: str = "arrow",
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Cross-frame MinHash-LSH near-duplicate join: pairs (id_l, id_r,
@@ -397,38 +411,14 @@ def minhash_lsh_join(
     bounded-bucket / bare-id-pair-dedup discipline as
     :func:`minhash_lsh_pairs`; the bucket cap applies to the corpus
     side (the hot side at scale). Rows whose ids collide across frames
-    (a doc present in both) are excluded."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    rpb = num_hashes // bands
+    (a doc present in both) are excluded.
 
-    def banded(df: DataFrame, out_id: str) -> DataFrame:
-        if family == "arrow":
-            staged = minhash_signatures_arrow(
-                df, id_col, text_col, num_hashes, shingle_n
-            ).withColumnRenamed("doc_id", out_id)
-        else:
-            staged = df.select(
-                F.col(id_col).alias(out_id),
-                F.element_at(
-                    F.transform(
-                        F.array(char_shingles(text_col, shingle_n)),
-                        lambda sh: minhash_signature(sh, num_hashes, family),
-                    ),
-                    1,
-                ).alias("__sig"),
-            )
-        return staged.select(
-            out_id, F.explode(_band_hashes(F.col("__sig"), bands, rpb, family)).alias("band_key")
-        )
-
-    def shingle_store(df: DataFrame, out_id: str, out_sh: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id), char_shingles(text_col, shingle_n).alias(out_sh)
-        )
-
-    lb = banded(left, "id_l")
-    rb = banded(right, "id_r")
+    PRECONDITION: ``id_col`` must be a NON-NULL UNIQUE key of each
+    frame — the id-based re-attach equi-joins drop rows whose id is
+    NULL and multiply pairs under duplicate ids. Distinct ids sharing
+    identical text all pair (the dedup is on ids, never on text)."""
+    lb = _minhash_bands(left, id_col, text_col, "id_l", shingle_n, num_hashes, bands, family)
+    rb = _minhash_bands(right, id_col, text_col, "id_r", shingle_n, num_hashes, bands, family)
     sized = rb.withColumn("__bs", F.count("*").over(Window.partitionBy("band_key")))
     rb_bounded = sized.where(F.col("__bs") <= max_bucket).drop("__bs")
 
@@ -438,26 +428,8 @@ def minhash_lsh_join(
         .select("id_l", "id_r")
         .dropDuplicates(["id_l", "id_r"])
     )
-    if family == "arrow":
-        pairs = bare.join(
-            left.select(F.col(id_col).alias("id_l"), F.col(text_col).alias("__t_l"))
-            .hint("shuffle_hash"),
-            "id_l",
-        ).join(
-            right.select(F.col(id_col).alias("id_r"), F.col(text_col).alias("__t_r"))
-            .hint("shuffle_hash"),
-            "id_r",
-        )
-        return _jaccard_verify_arrow(pairs, "__t_l", "__t_r", shingle_n, threshold).select(
-            "id_l", "id_r", "jaccard"
-        )
-    pairs = bare.join(
-        shingle_store(left, "id_l", "sh_l").hint("shuffle_hash"), "id_l"
-    ).join(shingle_store(right, "id_r", "sh_r").hint("shuffle_hash"), "id_r")
-    return (
-        pairs.withColumn("jaccard", F.round(jaccard(F.col("sh_l"), F.col("sh_r")), 4))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_l", "id_r", "jaccard")
+    return _verified_pairs(
+        bare, left, right, id_col, text_col, "id_l", "id_r", shingle_n, threshold, family
     )
 
 
@@ -637,95 +609,16 @@ def containment_pairs(
 # ---------------- SimHash ----------------
 
 
-def simhash_from_shingles(sh: Column) -> Column:
-    """64-bit SimHash from a *materialized* shingle-array column: one
-    pass hashes each shingle to a long, one fold accumulates per-bit
-    counts via shift/mask (pure integer ops — the earlier bin()-string
-    variant spent its time splitting 64-char strings), one fold packs
-    the majority vote into a bigint. Bit order is MSB-first (bit 63
-    first), identical to the previous string encoding. The xxhash64 is
-    computed once per shingle (materialized into ``hashes`` — the
-    shift/mask lambdas read the bound long, never re-hash)."""
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("long") for b in range(63, -1, -1)]
-            ),
-            lambda a, x: a + x,
-        ),
-    )
-    powers = F.array(
-        F.lit(-(1 << 63)).cast("long"),
-        *[F.lit(1 << b).cast("long") for b in range(62, -1, -1)],
-    )
-    n = F.size(sh)
-    return F.aggregate(
-        F.zip_with(
-            counts, powers,
-            lambda c, p: F.when(c * 2 >= n, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def simhash_fingerprints_arrow(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
-) -> DataFrame:
-    """(doc_id, fp) via an Arrow-vectorized majority fold: the JVM still
-    does shingling + xxhash64 (cheap codegen), the per-bit counting —
-    the part Spark can only run as interpreted HOF lambdas — runs as
-    numpy ``unpackbits``/``sum`` over Arrow batches. Bit-for-bit
-    identical to :func:`simhash_from_shingles` (MSB-first order;
-    equality pinned by tests), ~3x faster at sf0.1."""
-    import numpy as np
-    import pandas as pd
-
-    staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(char_shingles(text_col, shingle_n), lambda s: F.xxhash64(s)).alias("hs"),
-    )
-
-    def fold(batches):
-        for pdf in batches:
-            fps = []
-            for hs in pdf["hs"]:
-                a = np.asarray(hs, dtype=np.int64)
-                # little-endian longs -> MSB-first bit matrix (rows=shingles)
-                bits = np.unpackbits(
-                    a.view(np.uint8).reshape(-1, 8)[:, ::-1], axis=1
-                )
-                maj = bits.sum(axis=0) * 2 >= len(a)
-                val = 0
-                for b in maj:
-                    val = (val << 1) | int(b)
-                fps.append(val - (1 << 64) if val >= (1 << 63) else val)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "fp": fps})
-
-    id_type = staged.schema["doc_id"].dataType.simpleString()
-    return staged.mapInPandas(fold, f"doc_id {id_type}, fp long")
-
-
 def simhash_fingerprints_arrow2(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
 ) -> DataFrame:
     """(doc_id, fp) computed ENTIRELY Python-side: shingling, the
     memoized md5-low-64 base hash, and the numpy majority fold all run
     in one Arrow pass over the raw text — no interpreted JVM shingling
-    HOF anywhere (the dominant cost of the ``arrow`` engine, which
-    still JVM-computes per-shingle xxhash64 and ships ~8 bytes per
-    shingle through Arrow; here only the text crosses).
-
-    This is a DIFFERENT fingerprint family from the xxhash64 engines
-    (own ``engine="arrow2"``): Hamming-distance blocking behaves
-    identically in distribution, but fingerprints are not comparable
-    across engines — use for throughput paths with no cross-engine
-    pin. NULL text ⇒ NULL fp (the chunk equi-join then drops the doc,
-    matching the expr engine's NULL propagation)."""
+    HOF anywhere, and only the text crosses the Arrow boundary. Bit
+    order is MSB-first (bit 63 first); a bit is set when at least half
+    of the doc's distinct shingles set it. NULL text ⇒ NULL fp (the
+    chunk equi-join then drops the doc)."""
     import hashlib
 
     import numpy as np
@@ -764,43 +657,29 @@ def simhash_fingerprints_arrow2(
     return staged.mapInPandas(fold, f"doc_id {id_type}, fp long")
 
 
-def simhash(col: Column | str, shingle_n: int = 3) -> Column:
-    """SimHash of a raw text column (convenience form; stages nothing, so
-    prefer computing shingles into a column first on large data)."""
-    return simhash_from_shingles(char_shingles(col, shingle_n))
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     shingle_n: int = 3,
     max_hamming: int = 3,
-    engine: str = "expr",
+    engine: str = "arrow2",
 ) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance <= max_hamming.
+    """Near-dup pairs by 64-bit SimHash Hamming distance <= max_hamming.
 
     Blocking by pigeonhole: split the 64-bit fingerprint into
     ``max_hamming+1`` chunks — any pair within the distance budget
     agrees on at least one chunk, so candidates come from equi-joins on
     (chunk_idx, chunk_value). Columns: id_a, id_b, hamming.
 
-    ``engine``: ``"expr"`` (pure JVM expressions, zero Python),
-    ``"arrow"`` (numpy majority fold over Arrow batches — identical
-    fingerprints, faster on large corpora), or ``"arrow2"`` (fully
-    Python-side shingle+hash+fold with a memoized md5 base hash — the
-    fastest; its OWN fingerprint family, not comparable to the other
-    two engines)."""
+    Fingerprints come from :func:`simhash_fingerprints_arrow2`, the one
+    production engine; ``engine`` accepts only ``"arrow2"``. The
+    oracle-checked twin is :func:`simhash_pairs_md5`."""
+    if engine != "arrow2":
+        raise ValueError(f"unknown SimHash engine {engine!r} (only 'arrow2')")
     chunks = max_hamming + 1
     width = -(-64 // chunks)  # ceil: every bit must be covered by a chunk
-    if engine == "arrow":
-        base = simhash_fingerprints_arrow(df, id_col, text_col, shingle_n)
-    elif engine == "arrow2":
-        base = simhash_fingerprints_arrow2(df, id_col, text_col, shingle_n)
-    else:
-        base = df.select(
-            F.col(id_col).alias("doc_id"), char_shingles(text_col, shingle_n).alias("__sh")
-        ).select("doc_id", simhash_from_shingles(F.col("__sh")).alias("fp"))
+    base = simhash_fingerprints_arrow2(df, id_col, text_col, shingle_n)
     # Materialize the fingerprints BEFORE the self-join: both join sides
     # reference this subtree and Spark has no cross-side CSE, so without
     # a barrier the whole shingle→hash→fold pipeline (the dominant cost)
@@ -853,8 +732,7 @@ def simhash32_md5(sh: Column) -> Column:
     """32-bit SimHash as a '0'/'1' string — md5 family (oracle-portable:
     bit j = high bit of hex nibble j of md5(shingle), so both engines
     derive identical fingerprints from identical strings). Single fold
-    over the *materialized* shingle array, like
-    :func:`simhash_from_shingles`."""
+    over the *materialized* shingle array."""
     hexes = F.transform(
         sh,
         lambda s: F.filter(F.split(F.md5(s), "(?!^)"), lambda c: c != ""),

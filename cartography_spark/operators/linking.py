@@ -17,9 +17,10 @@ Scale notes:
   Catalyst can pick SMJ/SHJ and AQE can split skewed keys.
 - the fuzzy contains join is a theta-join (nested-loop): only valid with a
   broadcastable side. At web scale it must be *blocked* first — see
-  :func:`lsh_blocked_join` which replaces the quadratic scan with
-  MinHash-LSH candidate generation (this is where the entity-linking
-  blocking of the north-star lives).
+  :func:`cartography_spark.operators.dedup.minhash_lsh_join`, the
+  cross-frame kernel that replaces the quadratic scan with MinHash-LSH
+  candidate generation (entity-linking blocking lives in
+  ``pipeline/linking.py``).
 - missing targets drop out of the inner join, which is exactly the
   reference's CALL{}-subquery null-tolerance (``querybuilder.py:325-336``):
   each rel is computed as its own join and unioned, so one unmatched rel
@@ -28,7 +29,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from cartography_spark.schema.common import PropertyRef
 
@@ -71,7 +72,8 @@ def matcher_join(
             conds.append(F.col(f"__i_key_{k}") == F.lower(tcol))
         elif ref.fuzzy_and_ignore_case:
             # target key CONTAINS item value, case-insensitive (theta-join;
-            # requires a broadcastable side — use lsh_blocked_join at scale)
+            # requires a broadcastable side — use dedup.minhash_lsh_join
+            # at scale)
             conds.append(F.instr(F.lower(tcol), F.lower(ref.to_column(params))) > 0)
         elif ref.one_to_many:
             # item field is an array of target ids: explode -> equi-join
@@ -86,139 +88,3 @@ def matcher_join(
         cond = cond & c
     joined = it.join(t, cond, "inner")
     return joined.drop(*[c for c in joined.columns if c.startswith("__i_key_") or c.startswith("__t_key_")])
-
-
-def ngram_shingles(col: Column | str, n: int = 3) -> Column:
-    """Character n-gram shingle array of a (lowercased) string — JVM-side.
-
-    sequence + transform + substring, so it stays inside codegen (no
-    Python); used by LSH blocking and the n-gram Jaccard dedup.
-    """
-    s = F.lower(F.col(col) if isinstance(col, str) else col)
-    length = F.greatest(F.length(s) - F.lit(n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), length), lambda i: F.substring(s, i, F.lit(n)))
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """Array of ``num_hashes`` minhash values over a shingle array.
-
-    minhash_i = min over shingles of xxhash64(i, shingle) — a classic
-    (public-domain) MinHash construction using Spark's builtin xxhash64
-    as the hash family, entirely JVM-side.
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda sh: F.xxhash64(F.lit(i), sh)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def lsh_blocked_join(
-    items: DataFrame,
-    targets: DataFrame,
-    item_text: str,
-    target_text: str,
-    item_id: str,
-    target_id: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    jaccard_threshold: float | None = None,
-) -> DataFrame:
-    """MinHash-LSH candidate join between two string columns.
-
-    Replaces the quadratic fuzzy theta-join at scale: each side computes a
-    minhash signature, signatures are split into ``bands`` bands of
-    ``num_hashes/bands`` rows, and rows sharing any band hash become
-    candidates via an equi-join on (band_idx, band_hash) — a plain
-    shuffle join, no cross product.
-
-    Candidate pairs are deduplicated on the BARE ``(item_id, target_id)``
-    key pair (round-4 fix, VERDICT #3: the earlier text-based dedup
-    collapsed distinct rows sharing identical text, silently dropping
-    legitimate matches, and shuffled payload-bearing rows). Only the two
-    id columns ride the dedup shuffle; full rows re-attach afterwards
-    via hinted shuffle-hash joins — the same discipline as
-    ``operators/dedup.py:minhash_lsh_join``.
-
-    PRECONDITION (round 5, ADVICE): ``item_id`` / ``target_id`` must be
-    NON-NULL UNIQUE keys of their frames — the id-based dedup/re-attach
-    equi-joins silently drop rows whose id is NULL and multiply
-    candidate rows under duplicate ids (the store's merge key and every
-    catalog caller satisfy this by construction; pre-dedupe with
-    ``dropDuplicates``/``where(col.isNotNull())`` otherwise).
-
-    If ``jaccard_threshold`` is given, candidates are verified with the
-    exact shingle-set Jaccard of the two strings after re-attach. The
-    two shingle arrays are LET-BOUND through a 1-element transform
-    lambda (round 5, VERDICT #4): intersect and union both read the
-    bound variables, so each text is shingled ONCE per row — an inline
-    expression would be rebuilt per consumer (HOFs are interpreted, no
-    codegen CSE; PLANS.md measured 108 s vs 7.9 s for the signature
-    path's version of the same trap).
-
-    Returns candidate pairs with all columns of both inputs (targets
-    prefixed ``__t_``).
-    """
-    rows_per_band = num_hashes // bands
-    if rows_per_band * bands != num_hashes:
-        raise ValueError("num_hashes must be divisible by bands")
-
-    def banded_ids(df: DataFrame, id_col: str, text: str, out_id: str) -> DataFrame:
-        # Stage shingles before the signature: HOF lambdas are interpreted
-        # (no codegen CSE) — an inline shingle expression would be rebuilt
-        # num_hashes times per row. Only (id, band) rows leave this stage:
-        # payloads never enter the candidate shuffle.
-        staged = df.select(
-            F.col(id_col).alias(out_id),
-            ngram_shingles(text, shingle_n).alias("__shingles"),
-        ).withColumn("__sig", minhash_signature(F.col("__shingles"), num_hashes))
-        bands_col = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(*[F.col("__sig")[b * rows_per_band + r] for r in range(rows_per_band)]).alias("bh"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return staged.select(out_id, F.explode(bands_col).alias("__band"))
-
-    lb = banded_ids(items, item_id, item_text, "__id_l")
-    rb = banded_ids(targets, target_id, target_text, "__id_r")
-    pairs = (
-        lb.join(
-            rb,
-            (lb["__band.band"] == rb["__band.band"]) & (lb["__band.bh"] == rb["__band.bh"]),
-            "inner",
-        )
-        .select("__id_l", "__id_r")
-        .dropDuplicates(["__id_l", "__id_r"])
-    )
-    t = targets.select(*[F.col(c).alias(f"__t_{c}") for c in targets.columns])
-    cand = (
-        pairs.join(items.hint("shuffle_hash"), pairs["__id_l"] == F.col(item_id))
-        .join(t.hint("shuffle_hash"), F.col("__id_r") == F.col(f"__t_{target_id}"))
-        .drop("__id_l", "__id_r")
-    )
-    if jaccard_threshold is not None:
-        # expression-level let-binding: both shingle arrays computed once
-        # into a lambda variable; intersect/union read the binding
-        jac = F.element_at(
-            F.transform(
-                F.array(
-                    F.struct(
-                        ngram_shingles(item_text, shingle_n).alias("l"),
-                        ngram_shingles(f"__t_{target_text}", shingle_n).alias("r"),
-                    )
-                ),
-                lambda s: F.size(F.array_intersect(s["l"], s["r"]))
-                / F.size(F.array_union(s["l"], s["r"])),
-            ),
-            1,
-        )
-        cand = cand.where(jac >= jaccard_threshold)
-    return cand

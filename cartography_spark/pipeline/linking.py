@@ -5,7 +5,8 @@ analysis job (N2, ``data/jobs/analysis/gsuite_human_link.json``: exact
 equality on email) and its fuzzy matchers (J3/J4) to web scale:
 
 1. **Block** — MinHash-LSH over the entity's name/text property
-   (``operators/linking.py::lsh_blocked_join`` self-join form): a
+   (``operators/dedup.py::minhash_lsh_pairs``; the incremental form
+   joins a new batch to the corpus with ``minhash_lsh_join``): a
    shuffle equi-join on band keys, never a cross product.
 2. **Verify** — exact Jaccard on the blocked candidates (plus an
    optional extra predicate), dropping LSH false positives.
@@ -38,7 +39,7 @@ def candidate_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket: int = 1000,
-    family: str = "xxhash64",
+    family: str = "arrow",
 ) -> DataFrame:
     """LSH-blocked, Jaccard-verified equivalence pairs (src < dst).
 
@@ -46,8 +47,9 @@ def candidate_pairs(
     staged signatures, band-bucket size cap (a hot band key with B rows
     yields B² candidates — buckets beyond ``max_bucket`` are dropped;
     true pairs still surface via their other bands w.h.p.).
-    ``family``: ``xxhash64`` (production, JVM-fast) or ``md5`` (hex
-    strings a single-node SQL oracle replicates byte-identically)."""
+    ``family``: ``arrow`` (production: Arrow-vectorized signature fold
+    and Jaccard verify) or ``md5`` (hex strings a single-node SQL oracle
+    replicates byte-identically)."""
     from cartography_spark.operators.dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(
@@ -68,7 +70,7 @@ def link_entities_incremental(
     threshold: float = 0.8,
     num_hashes: int = 32,
     bands: int = 8,
-    family: str = "xxhash64",
+    family: str = "arrow",
 ) -> dict[str, int]:
     """Per-sync incremental linking: ONLY the nodes this run touched
     (``lastupdated == update_tag``, i.e. the just-merged batch) are
@@ -84,7 +86,7 @@ def link_entities_incremental(
 
     Equivalence: running this after each batch produces the same
     canonical ids as one :func:`link_entities` over the final corpus
-    (pinned by test)."""
+    (pinned by test). ``family`` is as in :func:`candidate_pairs`."""
     from cartography_spark.operators.dedup import minhash_lsh_join
 
     nodes = store.read_nodes().where(F.col("label") == label)
@@ -163,15 +165,15 @@ def link_entities(
     update_tag: int,
     scope_id: str | None = None,
     threshold: float = 0.8,
-    family: str = "xxhash64",
+    family: str = "arrow",
 ) -> dict[str, int]:
     """Link all ``label`` nodes in the store by near-duplicate
     ``text_prop``; write canonical_id props + SAME_AS edges.
 
-    ``family="arrow"`` switches the blocking+verify kernels to the
-    Arrow-vectorized engines (the production throughput path — see
-    ``operators/dedup``); pairs agree with the default at equal recall
-    bars since the exact-Jaccard verify is engine-independent."""
+    ``family`` picks the MinHash kernels of :func:`candidate_pairs`:
+    ``"arrow"`` (production) or ``"md5"`` (oracle parity); pairs agree
+    at equal recall bars since the exact-Jaccard verify is
+    engine-independent."""
     nodes = store.read_nodes().where(F.col("label") == label)
     entities = nodes.select(
         F.col("id"), F.element_at("props", text_prop).alias("__text")

@@ -1572,7 +1572,7 @@ def dedup_retention_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01 driver scale the doc universe is restricted to a
     deterministic doc_id%5 slice to keep the exact baseline at gate
     cost (sf0.1: 1 000 docs, ~9 100 dup pairs). Production retention
-    would feed `lsh_blocked_join`/minhash pairs into the same MIS."""
+    would feed `minhash_lsh_pairs` pairs into the same MIS."""
     from cartography_spark.operators.dedup import ngram_jaccard_pairs
     from cartography_spark.operators.graphrank import maximal_independent_set
 

@@ -6,6 +6,8 @@ Spark plans in catalog.py exactly; doubles are rounded identically;
 hashes are md5 (hex-identical across engines).
 """
 
+from collections.abc import Callable
+
 ORACLES: dict[str, str] = {}
 
 ORACLES["kg_node_merge_u1"] = """
@@ -587,9 +589,6 @@ SELECT a.id AS doc_id, (a.id IN (SELECT id FROM kept)) AS kept
 FROM a0 a ORDER BY a.id
 """
     )
-
-
-ORACLES["dedup_retention_mis"] = _mis_oracle_sql()
 
 
 # Excision twin: same coverage rule (token i cut iff a repeated-gram
@@ -1360,11 +1359,6 @@ ORDER BY t.crawl_id
 """
 
 
-ORACLES["kg_fact_intervals"] = _fact_intervals_oracle_sql()
-ORACLES["kg_fact_churn"] = _fact_churn_oracle_sql()
-
-
-ORACLES["kg_pages_e2e"] = _pages_e2e_oracle_sql()
 # Round 5 (VERDICT #5): second, larger extraction gate — 4 000 pages,
 # independent seed — so the driver's value-hash check covers the
 # html->text->triples chain at 8x the r4 gate's scale.
@@ -1460,12 +1454,6 @@ nodes AS MATERIALIZED (
   SELECT DISTINCT id FROM (
     SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges))"""
     return _pagerank_oracle_sql(graph_ctes, weighted=True)
-
-
-ORACLES["web_link_graph"] = _link_graph_oracle_sql()
-ORACLES["web_crawl_frontier"] = _crawl_frontier_oracle_sql()
-# web_host_pagerank is registered below, after _pagerank_oracle_sql
-# (its unroll builder) is defined.
 
 
 def _pagerank_oracle_sql(
@@ -1595,13 +1583,6 @@ ORACLES["kg_pagerank_personalized"] = _pagerank_oracle_sql(
     seed_pred="id LIKE 'R%'"
 )
 
-# Weighted PageRank over the EXTRACTED host link graph (round 5 day-5):
-# the full html -> href extraction -> host aggregation -> rank chain in
-# one gate; the twin regenerates the planted links and runs the same
-# unrolled power iteration.
-ORACLES["web_host_pagerank"] = _host_pagerank_oracle_sql()
-
-
 def _host_scc_ctes(n_pages: int, seed: int) -> str:
     """Extends :func:`_links_ctes` with ``sccs(id, scc)`` — the exact
     SCCs of the planted host graph, computed ALGORITHM-INDEPENDENTLY
@@ -1678,15 +1659,6 @@ SELECT n.id,
        END AS region
 FROM hnodes n ORDER BY n.id
 """
-
-
-# Web bowtie family (round 5 day-5 continuation): the Broder-bowtie
-# audit over the EXTRACTED host graph. The twin re-derives the planted
-# links AND computes SCC/regions via a recursive closure — a different
-# algorithm than Spark's FW-BW coloring, so the gate cross-checks
-# mutual-reachability semantics end to end.
-ORACLES["web_host_scc"] = _host_scc_oracle_sql()
-ORACLES["web_bowtie"] = _bowtie_oracle_sql()
 
 
 def _condensation_oracle_sql(n_pages: int = 500, seed: int = 42) -> str:
@@ -1768,14 +1740,6 @@ ORDER BY r.src
 """
 
 
-# Redirect resolution + condensation layering (round 5 day-5): both
-# twins walk/close step-by-step where Spark pointer-doubles /
-# frontier-iterates — algorithm-independent checks of the chain
-# terminal and DAG-level semantics.
-ORACLES["web_redirect_resolution"] = _redirect_oracle_sql()
-ORACLES["web_scc_condensation"] = _condensation_oracle_sql()
-
-
 def _fetch_schedule_oracle_sql(n_pages: int = 500, seed: int = 42) -> str:
     """Twin for ``web_fetch_schedule``: the frontier is derived
     ARITHMETICALLY (tid odd — outside the even-id crawled batch — or
@@ -1799,9 +1763,6 @@ SELECT url, host, n_inlinks,
          AS fetch_round
 FROM f ORDER BY url
 """
-
-
-ORACLES["web_fetch_schedule"] = _fetch_schedule_oracle_sql()
 
 
 def _hits_oracle_sql(iters: int = 5) -> str:
@@ -3101,9 +3062,6 @@ JOIN nsrc ON w.subj = nsrc.subj AND w.pred = nsrc.pred
 """
 
 
-ORACLES["kg_fact_fusion"] = _fact_fusion_oracle_sql()
-
-
 def _bpe_oracle_sql(k: int = 6) -> str:
     """Unrolled BPE merge learning over the documents vocabulary.
     Merge application uses a match-run PARITY rule over the original
@@ -3244,9 +3202,6 @@ FROM top t JOIN tot o USING (dst_url)
 """
 
 
-ORACLES["web_anchor_text"] = _anchor_text_oracle_sql()
-
-
 # Domain quality with empirical-Bayes shrinkage
 # (operators/curation.py::domain_quality): per-doc quality_score is the
 # text_quality expression; domain means shrink toward the corpus mean
@@ -3264,3 +3219,48 @@ SELECT d.domain AS source, d.n_docs,
          AS shrunk_score
 FROM d CROSS JOIN g
 """
+
+
+# ---------------------------------------------------------------------------
+# Page-count-keyed twins. These gates run the catalog at
+# ``catalog._pages_n(sf_dir)`` pages (500 at the driver's sf0.01 gate,
+# 50k x sf above it), so their oracle is a builder of that count. ORACLES
+# serves each at DRIVER_PAGES; scripts/check_oracle.py rebuilds the same
+# builders at its own sf dir's count, so a gate cannot be green in one
+# and stale in the other. Every builder's seed defaults to the
+# catalog's 42.
+# ---------------------------------------------------------------------------
+DRIVER_PAGES = 500
+SF_KEYED_ORACLES: dict[str, Callable[[int], str]] = {
+    "kg_pages_e2e": _pages_e2e_oracle_sql,
+    "kg_fact_intervals": _fact_intervals_oracle_sql,
+    "kg_fact_churn": _fact_churn_oracle_sql,
+    "kg_fact_fusion": _fact_fusion_oracle_sql,
+    "web_link_graph": _link_graph_oracle_sql,
+    "web_crawl_frontier": _crawl_frontier_oracle_sql,
+    # Weighted PageRank over the EXTRACTED host link graph: the full
+    # html -> href extraction -> host aggregation -> rank chain in one
+    # gate; the twin regenerates the planted links and runs the same
+    # unrolled power iteration.
+    "web_host_pagerank": _host_pagerank_oracle_sql,
+    # The Broder-bowtie audit over the EXTRACTED host graph. The twin
+    # re-derives the planted links AND computes SCC/regions via a
+    # recursive closure — a different algorithm than Spark's FW-BW
+    # coloring, so the gate cross-checks mutual-reachability semantics
+    # end to end.
+    "web_host_scc": _host_scc_oracle_sql,
+    "web_bowtie": _bowtie_oracle_sql,
+    # Both twins walk/close step-by-step where Spark pointer-doubles /
+    # frontier-iterates — algorithm-independent checks of the chain
+    # terminal and DAG-level semantics.
+    "web_redirect_resolution": _redirect_oracle_sql,
+    "web_scc_condensation": _condensation_oracle_sql,
+    "web_fetch_schedule": _fetch_schedule_oracle_sql,
+    "web_anchor_text": _anchor_text_oracle_sql,
+    # MIS retention restricts its doc universe to a doc_id % 5 slice
+    # above the driver scale (catalog.py::dedup_retention_mis).
+    "dedup_retention_mis": lambda n_pages: _mis_oracle_sql(
+        mod=1 if n_pages <= DRIVER_PAGES else 5
+    ),
+}
+ORACLES.update({gate: build(DRIVER_PAGES) for gate, build in SF_KEYED_ORACLES.items()})

@@ -98,50 +98,15 @@ def main():
         shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    # kg_pages_e2e is sf-keyed (500 pages at the sf0.01 driver gate,
-    # more at bench scale); the static ORACLES entry is its 500-page
-    # twin. Regenerate the oracle at THIS run's page count so the local
-    # gate stays valid at any sf_dir instead of spuriously failing
-    # above sf0.01. (The driver always compares at sf0.01, where the
-    # static entry is already exact.)
+    # Page-count-keyed gates: ORACLES serves their driver-scale
+    # (500-page) twins; rebuild them at THIS run's page count so the local
+    # gate stays valid at any sf_dir instead of spuriously failing above
+    # sf0.01.
     from cartography_spark.queries.catalog import _pages_n
-    from cartography_spark.queries.oracles import (
-        _anchor_text_oracle_sql,
-        _bowtie_oracle_sql,
-        _condensation_oracle_sql,
-        _crawl_frontier_oracle_sql,
-        _fact_churn_oracle_sql,
-        _fact_fusion_oracle_sql,
-        _fact_intervals_oracle_sql,
-        _fetch_schedule_oracle_sql,
-        _host_pagerank_oracle_sql,
-        _host_scc_oracle_sql,
-        _link_graph_oracle_sql,
-        _mis_oracle_sql,
-        _pages_e2e_oracle_sql,
-        _redirect_oracle_sql,
-    )
+    from cartography_spark.queries.oracles import SF_KEYED_ORACLES
 
-    oracles = dict(ORACLES)
     n_pages = _pages_n(sf_dir)
-    oracles["kg_pages_e2e"] = _pages_e2e_oracle_sql(n_pages, 42)
-    # The link-graph family is sf-keyed the same way (same pages batch).
-    oracles["web_link_graph"] = _link_graph_oracle_sql(n_pages, 42)
-    oracles["web_crawl_frontier"] = _crawl_frontier_oracle_sql(n_pages, 42)
-    oracles["web_host_pagerank"] = _host_pagerank_oracle_sql(n_pages, 42)
-    oracles["web_host_scc"] = _host_scc_oracle_sql(n_pages, 42)
-    oracles["web_bowtie"] = _bowtie_oracle_sql(n_pages, 42)
-    oracles["web_redirect_resolution"] = _redirect_oracle_sql(n_pages, 42)
-    oracles["web_scc_condensation"] = _condensation_oracle_sql(n_pages, 42)
-    oracles["web_fetch_schedule"] = _fetch_schedule_oracle_sql(n_pages, 42)
-    # MIS retention restricts its doc universe above the driver scale
-    # (catalog.py::dedup_retention_mis) — key the twin the same way.
-    oracles["dedup_retention_mis"] = _mis_oracle_sql(mod=1 if n_pages <= 500 else 5)
-    # The temporal-fact family rides the same sf-keyed pages batch.
-    oracles["kg_fact_intervals"] = _fact_intervals_oracle_sql(n_pages, 42)
-    oracles["kg_fact_churn"] = _fact_churn_oracle_sql(n_pages, 42)
-    oracles["kg_fact_fusion"] = _fact_fusion_oracle_sql(n_pages, 42)
-    oracles["web_anchor_text"] = _anchor_text_oracle_sql(n_pages, 42)
+    oracles = {**ORACLES, **{g: build(n_pages) for g, build in SF_KEYED_ORACLES.items()}}
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

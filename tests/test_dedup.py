@@ -51,7 +51,7 @@ def test_exact_dedup(docs):
     assert survivors == {1, 3, 4, 5, 6}
 
 
-@pytest.mark.parametrize("family", ["xxhash64", "md5", "arrow"])
+@pytest.mark.parametrize("family", ["md5", "arrow"])
 def test_minhash_lsh_finds_near_dups(docs, family):
     pairs = {
         (r["id_a"], r["id_b"])
@@ -164,14 +164,14 @@ def test_minhash_arrow_signatures_property(spark):
     run()
 
 
-def test_minhash_arrow_family_matches_xxhash64_values(docs):
-    """Arrow and xxhash64 families differ only in LSH blocking (exact
-    verify is engine-independent): on the fixture corpus both find the
-    same pairs with the same 4dp jaccard values."""
-    xx = {
+def test_minhash_arrow_family_matches_md5_values(docs):
+    """The arrow (production) and md5 (oracle) families differ only in
+    LSH blocking (exact verify is engine-independent): on the fixture
+    corpus both find the same pairs with the same 4dp jaccard values."""
+    md5 = {
         (r["id_a"], r["id_b"], r["jaccard"])
         for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", num_hashes=16, bands=8, threshold=0.6, family="xxhash64"
+            docs, "doc_id", "text", num_hashes=16, bands=8, threshold=0.6, family="md5"
         ).collect()
     }
     ar = {
@@ -180,7 +180,18 @@ def test_minhash_arrow_family_matches_xxhash64_values(docs):
             docs, "doc_id", "text", num_hashes=16, bands=8, threshold=0.6, family="arrow"
         ).collect()
     }
-    assert xx == ar and len(ar) > 0
+    assert md5 == ar and len(ar) > 0
+
+
+def test_minhash_rejects_deleted_xxhash64_family(docs):
+    """Only the md5 and arrow MinHash families exist; any other value
+    raises while the plan is built, never silently picks a family."""
+    from cartography_spark.operators.dedup import minhash_lsh_join
+
+    with pytest.raises(ValueError, match="MinHash family"):
+        minhash_lsh_pairs(docs, "doc_id", "text", family="xxhash64")
+    with pytest.raises(ValueError, match="MinHash family"):
+        minhash_lsh_join(docs, docs, "doc_id", "text", family="xxhash64")
 
 
 def test_minhash_arrow_null_text_drops_pairs(spark):
@@ -197,13 +208,28 @@ def test_minhash_arrow_null_text_drops_pairs(spark):
     assert pairs == {(1, 2)}
 
 
+def _py_simhash_arrow2(text: str, n: int = 3) -> int:
+    """Independent model of the arrow2 fingerprint: per distinct
+    lowercased char n-gram, the md5 digest's first 8 bytes as a
+    big-endian uint64; bit set iff at least half the n-grams set it;
+    MSB-first, read as a signed 64-bit long."""
+    import hashlib
+
+    s = text.lower()
+    grams = {s[i : i + n] for i in range(max(len(s) - n + 1, 1))}
+    hs = [int.from_bytes(hashlib.md5(g.encode()).digest()[:8], "big") for g in grams]
+    val = 0
+    for bit in range(63, -1, -1):
+        ones = sum((h >> bit) & 1 for h in hs)
+        val = (val << 1) | (1 if ones * 2 >= len(hs) else 0)
+    return val - (1 << 64) if val >= (1 << 63) else val
+
+
 def test_simhash_arrow2_engine_behavior(spark):
     """arrow2 is its own fingerprint family (no cross-engine pin), so
     pin its CONTRACT: identical texts collide at hamming 0, unrelated
     texts stay outside a tight budget, NULL-text docs emit no pairs,
     and its fingerprint matches an independent pure-Python model."""
-    import hashlib
-
     from cartography_spark.operators.dedup import (
         simhash_fingerprints_arrow2,
         simhash_pairs,
@@ -224,16 +250,12 @@ def test_simhash_arrow2_engine_behavior(spark):
 
     fps = {r["doc_id"]: r["fp"] for r in simhash_fingerprints_arrow2(docs, "doc_id", "text").collect()}
     assert fps[4] is None
-    # independent model for doc 1
-    s = "the quick brown fox jumps over the lazy dog"
-    grams = {s[i : i + 3] for i in range(max(len(s) - 2, 1))}
-    hs = [int.from_bytes(hashlib.md5(g.encode()).digest()[:8], "big") for g in grams]
-    val = 0
-    for bit in range(63, -1, -1):
-        ones = sum((h >> bit) & 1 for h in hs)
-        val = (val << 1) | (1 if ones * 2 >= len(hs) else 0)
-    expected = val - (1 << 64) if val >= (1 << 63) else val
+    expected = _py_simhash_arrow2("the quick brown fox jumps over the lazy dog")
     assert fps[1] == expected and fps[2] == expected
+    # the deleted engines are rejected, not silently mapped to arrow2
+    for engine in ("expr", "arrow"):
+        with pytest.raises(ValueError, match="SimHash engine"):
+            simhash_pairs(docs, "doc_id", "text", engine=engine)
 
 
 def test_ngram_jaccard_blocked(docs):
@@ -246,59 +268,22 @@ def test_ngram_jaccard_blocked(docs):
 
 
 def test_simhash_pairs(docs):
-    from cartography_spark.operators.dedup import simhash
-
     budget = 12
-    # oracle: pairwise hamming of the actual fingerprints
-    fps = {r["doc_id"]: r["fp"] for r in docs.select("doc_id", simhash("text").alias("fp")).collect()}
-    expected = {
+    # oracle: pairwise hamming of the fingerprints of the independent model
+    fps = {doc_id: _py_simhash_arrow2(text) for doc_id, text, _ in DOCS}
+    hamming = {
         (a, b): bin((fps[a] ^ fps[b]) & ((1 << 64) - 1)).count("1")
         for a, b in itertools.combinations(sorted(fps), 2)
-        if bin((fps[a] ^ fps[b]) & ((1 << 64) - 1)).count("1") <= budget
     }
+    expected = {p: h for p, h in hamming.items() if h <= budget}
     rows = simhash_pairs(docs, "doc_id", "text", max_hamming=budget).collect()
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in rows}
     # pigeonhole blocking guarantees every within-budget pair is found
     assert pairs == expected
     assert pairs[(1, 2)] == 0  # identical text -> identical fingerprint
+    # the unrelated doc 6 lies outside the budget of both clusters
+    assert hamming[(1, 6)] > budget and hamming[(4, 6)] > budget
     assert (1, 6) not in pairs and (4, 6) not in pairs
-
-
-def test_simhash_arrow_engine_identical_fingerprints(spark):
-    """The numpy Arrow fold must produce BIT-IDENTICAL fingerprints to
-    the JVM expression fold (MSB-first order, majority tie behavior),
-    and simhash_pairs must return the same pairs under either engine."""
-    from pyspark.sql import functions as F
-
-    from cartography_spark.operators.dedup import (
-        simhash_fingerprints_arrow,
-        simhash_from_shingles,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, (t,) in enumerate(
-            [(d[1],) for d in DOCS] + [("short",), ("x",), ("another text entirely different",)]
-        )],
-        "doc_id long, text string",
-    )
-    expr = {
-        r["doc_id"]: r["fp"]
-        for r in docs.select(
-            "doc_id", char_shingles("text", 3).alias("sh")
-        ).select("doc_id", simhash_from_shingles(F.col("sh")).alias("fp")).collect()
-    }
-    arrow = {
-        r["doc_id"]: r["fp"]
-        for r in simhash_fingerprints_arrow(docs, "doc_id", "text", 3).collect()
-    }
-    assert expr == arrow
-
-    p_expr = {(r["id_a"], r["id_b"]) for r in simhash_pairs(docs, "doc_id", "text").collect()}
-    p_arrow = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_pairs(docs, "doc_id", "text", engine="arrow").collect()
-    }
-    assert p_expr == p_arrow
 
 
 def test_char_shingles_deterministic(spark):
@@ -378,7 +363,7 @@ def test_minhash_lsh_join_caps_corpus_buckets(spark):
     assert (201, 100) in got or (201, 101) in got
 
 
-@pytest.mark.parametrize("family", ["xxhash64", "arrow"])
+@pytest.mark.parametrize("family", ["md5", "arrow"])
 def test_minhash_lsh_join_excludes_same_id(spark, family):
     """A doc present in both frames must not pair with itself."""
     from cartography_spark.operators.dedup import minhash_lsh_join

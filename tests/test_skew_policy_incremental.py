@@ -176,6 +176,7 @@ def test_watermark_source_id_stable_across_processes():
     import os
     import subprocess
     import sys
+    from pathlib import Path
 
     from cartography_spark.sources.incremental import _source_id
 
@@ -185,10 +186,11 @@ def test_watermark_source_id_stable_across_processes():
         "from cartography_spark.sources.incremental import _source_id;"
         "print(_source_id('events'))",
     ]
+    repo_root = Path(__file__).resolve().parents[1]
     outs = []
     for seed in ("1", "2"):
         env = dict(os.environ, PYTHONHASHSEED=seed)
-        outs.append(int(subprocess.check_output(cmd, env=env, cwd="/root/repo").strip()))
+        outs.append(int(subprocess.check_output(cmd, env=env, cwd=repo_root).strip()))
     assert outs[0] == outs[1] == _source_id("events")
 
 

@@ -254,7 +254,9 @@ def test_two_process_merges_both_survive(spark, tmp_path):
     import subprocess
     import sys
     import textwrap
+    from pathlib import Path
 
+    repo_root = str(Path(__file__).resolve().parents[1])
     root = str(tmp_path / "g")
     a = GraphStore(spark, root)
     a.merge_nodes(_nodes_df(spark, [("Seed", "s0", None, {})]), 1)
@@ -262,7 +264,7 @@ def test_two_process_merges_both_survive(spark, tmp_path):
     child = textwrap.dedent(
         """
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, sys.argv[2])
         from cartography_spark.session import get_spark
         from cartography_spark.store.graphstore import GraphStore
         spark = get_spark(app_name="child-writer", cores=2, shuffle_partitions=2)
@@ -288,7 +290,7 @@ def test_two_process_merges_both_survive(spark, tmp_path):
             fired["n"] += 1
             # parent now holds a stale snapshot; the child commits first
             proc = subprocess.run(
-                [sys.executable, "-c", child, root],
+                [sys.executable, "-c", child, root, repo_root],
                 capture_output=True,
                 text=True,
                 timeout=300,
