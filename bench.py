@@ -91,9 +91,9 @@ def kg_cc_cooccurrence(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from cartography_spark.operators.components import connected_components
-    from cartography_spark.pipeline.flagship import page_triples_fused
+    from cartography_spark.pipeline.flagship import page_triples
 
-    triples = page_triples_fused(spark, 20000, seed=42)
+    triples = page_triples(spark, 20000, seed=42)
     edges = triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst")).distinct()
     return connected_components(edges)
 
@@ -190,11 +190,11 @@ def run_flagship(spark, n_pages: int) -> dict:
 
     # North-rule P/R vs the reference extraction (triples from the
     # generator's golden text) — not timed, reported for the record.
-    from cartography_spark.pipeline.flagship import page_triples_fused
+    from cartography_spark.pipeline.flagship import page_triples
 
     pages = synthesize_pages(spark, min(n_pages, 20000), seed=42)
     reference = extract_triples_jvm(pages.select("url", "warc_ts", "text"))
-    pipeline = page_triples_fused(spark, min(n_pages, 20000), seed=42)
+    pipeline = page_triples(spark, min(n_pages, 20000), seed=42)
     ref_n = reference.count()
     pipe_n = pipeline.count()
     fp = pipeline.exceptAll(reference).count()

@@ -29,12 +29,12 @@ def cmd_flagship(args) -> int:
     """Run the flagship KG pipeline on synthesized pages; print stats."""
     from pyspark.sql import Observation, functions as F
 
-    from cartography_spark.pipeline.flagship import page_triples_fused
+    from cartography_spark.pipeline.flagship import page_triples
 
     spark = _spark(args)
     t0 = time.time()
     obs = Observation("n")
-    triples = page_triples_fused(spark, args.pages, seed=args.seed).observe(
+    triples = page_triples(spark, args.pages, seed=args.seed).observe(
         obs, F.count(F.lit(1)).alias("n")
     )
     agg = triples.groupBy("subj", "pred", "obj").agg(F.count("*").alias("n"))
@@ -52,7 +52,7 @@ def cmd_sync(args) -> int:
     Load/Cleanup, ``sync.py:126-156``)."""
     from pyspark.sql import functions as F
 
-    from cartography_spark.pipeline.flagship import page_triples_fused
+    from cartography_spark.pipeline.flagship import page_triples
     from cartography_spark.pipeline.sync import Sync, load
     from cartography_spark.schema import (
         LinkDirection, NodeSchema, PropertyRef, RelSchema, TargetNodeMatcher,
@@ -88,7 +88,7 @@ def cmd_sync(args) -> int:
         return load(st, crawl, spark.createDataFrame([(args.crawl_id,)], "cid string"), tag)
 
     def stage_ingest(st, tag, **p):
-        triples = page_triples_fused(spark, args.pages, seed=args.seed).cache()
+        triples = page_triples(spark, args.pages, seed=args.seed).cache()
         subjects = triples.select(F.col("subj").alias("name"), F.col("obj")).distinct()
         out = load(st, entity, subjects, tag, CRAWL_ID=args.crawl_id)
         triples.unpersist()
@@ -346,7 +346,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--cores", default=None, help="local[N] cores (default env/all)")
     sub = p.add_subparsers(dest="command", required=True)
 
-    f = sub.add_parser("flagship", help="run the fused KG pipeline, print throughput")
+    f = sub.add_parser("flagship", help="run the flagship KG pipeline, print throughput")
     f.add_argument("--pages", type=int, default=20000)
     f.add_argument("--seed", type=int, default=42)
     f.set_defaults(fn=cmd_flagship)

@@ -1,5 +1,5 @@
 from cartography_spark.functions.textextract import extract_text
-from cartography_spark.functions.triples import extract_triples, extract_mentions
+from cartography_spark.functions.triples import extract_mentions, extract_triples_jvm
 from cartography_spark.functions.textstats import (
     bpe_ish_token_count,
     doc_fingerprint,
@@ -15,7 +15,7 @@ from cartography_spark.functions.multimodal import (
 )
 
 __all__ = [
-    "extract_text", "extract_triples", "extract_mentions",
+    "extract_text", "extract_triples_jvm", "extract_mentions",
     "token_count", "bpe_ish_token_count", "quality_features", "langid",
     "doc_fingerprint", "kmin_fingerprints",
     "decode_media", "frame_sample", "synthesize_media",

@@ -18,9 +18,8 @@ Two implementations of one spec:
   in WholeStageCodegen, so the html bytes never cross into a Python
   worker. The html column is never shuffled (extraction happens in the
   scan stage, before any wide transform).
-- :func:`extract_text_str` — the Python parity oracle, which
-  :func:`extract_text_stage` wraps as a fusable Arrow stage for
-  ``pipeline.flagship.page_triples_fused``.
+- :func:`extract_text_str` — the Python parity oracle the tests
+  compare the kernel against (tests/test_jvm_extraction.py).
 
 The spec both follow: decode UTF-8 with U+FFFD for each invalid
 sequence (Python's ``errors="replace"``); drop
@@ -33,9 +32,7 @@ space.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 _BLOCK_TAGS = "script|style|nav|footer|header|aside"
@@ -69,27 +66,6 @@ def extract_text_str(html: str) -> str:
     """
     cleaned = _DROP_BLOCKS_RE.sub("", html)
     return " ".join(_PARA_RE.findall(cleaned))
-
-
-def _extract_batch(html: pd.Series) -> pd.Series:
-    decoded = html.map(lambda b: b.decode("utf-8", errors="replace") if b is not None else "")
-    return decoded.map(extract_text_str)
-
-
-def extract_text_stage(
-    keep: list[str], html_col: str = "html", out_col: str = "text"
-):
-    """Fusable Arrow stage (see functions/fuse.py): pages batches ->
-    batches of ``keep`` columns + extracted ``out_col``; the heavy html
-    binary never leaves the Python worker."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[keep].copy()
-            out[out_col] = _extract_batch(pdf[html_col])
-            yield out
-
-    return run
 
 
 def extract_text(df: DataFrame, html_col: str = "html", out_col: str = "text") -> DataFrame:

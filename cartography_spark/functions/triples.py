@@ -1,15 +1,16 @@
 """OpenIE-style (subj, pred, obj) triple extraction.
 
-Two extractors:
+Two extractors, both pure JVM (no Python worker):
 
-- :func:`extract_triples` — sentence-pattern extraction over the
-  ``pages`` corpus (vectorized pandas regex inside ``mapInPandas``;
-  the fan-out 1 page -> N triples mirrors the reference's fan-out
-  transform, ``cartography/intel/aws/ec2/instances.py:75-198``).
-- :func:`extract_mentions` — pure-JVM entity-mention extraction
-  (split + explode + vocabulary semi-join), used where the per-row
-  logic is expressible without Python at all: this is the fast path
-  and stays inside WholeStageCodegen.
+- :func:`extract_triples_jvm` — sentence-pattern extraction over the
+  ``pages`` corpus: one ``regexp_extract_all`` + explode inside
+  WholeStageCodegen; the fan-out 1 page -> N triples mirrors the
+  reference's fan-out transform,
+  ``cartography/intel/aws/ec2/instances.py:75-198``. Its Python
+  parity oracle is :data:`SENTENCE_RE` (tests/test_triples_paths.py,
+  tests/test_jvm_extraction.py).
+- :func:`extract_mentions` — entity-mention extraction (split +
+  explode + vocabulary semi-join).
 
 Scale: extraction is embarrassingly parallel (narrow); the only wide
 op downstream is the aggregation/linking the caller adds. The pred
@@ -19,62 +20,33 @@ vocabulary is tiny and broadcast by Catalyst automatically.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 # Sentence grammar of the synthetic corpus: "<Entity> <pred phrase> <Entity>."
-# where predicates are 1-2 lowercase words. Multi-match per text via
-# pandas .str.extractall (vectorized, no Python loop).
+# where predicates are 1-2 lowercase words. The parity oracle of
+# extract_triples_jvm; _SENTENCE_SQL is its Java spelling.
 SENTENCE_RE = re.compile(
     r"(?P<subj>[A-Z][A-Za-z0-9]*) (?P<pred>[a-z]+(?: [a-z]+)?) (?P<obj>[A-Z][A-Za-z0-9]*)\."
 )
-
-TRIPLES_SCHEMA = "url string, warc_ts timestamp, subj string, pred string, obj string"
-
-
-def extract_triples_stage(text_col: str = "text"):
-    """Fusable Arrow stage (functions/fuse.py): text batches -> triple
-    batches (1 page -> N matched sentences, unmatched pages drop)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            matches = pdf[text_col].str.extractall(SENTENCE_RE)
-            if len(matches) == 0:
-                continue
-            matches = matches.reset_index(level=1, drop=True)
-            out = pdf[["url", "warc_ts"]].join(matches, how="inner")
-            out["pred"] = out["pred"].str.replace(" ", "_", regex=False)
-            yield out[["url", "warc_ts", "subj", "pred", "obj"]]
-
-    return run
-
-
-def extract_triples(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """pages(url, warc_ts, text, ...) -> triples(url, warc_ts, subj, pred, obj).
-
-    One output row per matched sentence; rows with no match drop out
-    (reference analog: conditional row filters, T3).
-    """
-    return df.mapInPandas(extract_triples_stage(text_col), schema=TRIPLES_SCHEMA)
-
 
 _SENTENCE_SQL = r"([A-Z][A-Za-z0-9]*) ([a-z]+(?: [a-z]+)?) ([A-Z][A-Za-z0-9]*)\\."
 
 
 def extract_triples_jvm(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whole-stage-codegen twin of :func:`extract_triples`: one
-    ``regexp_extract_all`` of whole sentences, explode, then the fields
-    by string ops. A match is ``Subj pred [pred2] Obj.``, 3 or 4
+    """pages(url, warc_ts, text, ...) -> triples(url, warc_ts, subj,
+    pred, obj), one row per matched sentence; rows with no match drop
+    out (reference analog: conditional row filters, T3).
+
+    One ``regexp_extract_all`` of whole sentences, explode, then the
+    fields by string ops. A match is ``Subj pred [pred2] Obj.``, 3 or 4
     single-space-separated tokens, so ``subj`` is the first token,
     ``obj`` the last without its ``.``, and ``pred`` the middle tokens
-    joined by ``_``. Verified output-identical to the pandas path
-    (tests/test_triples_paths.py) and to the regex's capture groups
-    (tests/test_jvm_extraction.py); use it when the pipeline must stay
-    JVM-only (no Python workers)."""
+    joined by ``_``. Output-identical to :data:`SENTENCE_RE`'s capture
+    groups with ``pred`` spaces turned into ``_``
+    (tests/test_triples_paths.py on a synthesized corpus,
+    tests/test_jvm_extraction.py on hand-built and fuzzed texts)."""
     matches = df.select(
         "url",
         "warc_ts",

@@ -372,55 +372,6 @@ def assign_ivf_buckets(
     )
 
 
-def assign_ivf_buckets_arrow(
-    df: DataFrame,
-    vec_col: str,
-    centroids: DataFrame,
-    out_col: str = "ivf_bucket",
-    nprobe: int = 1,
-) -> DataFrame:
-    """BLAS engine for LARGE centroid counts: the centroid matrix is
-    broadcast to the Python workers and each Arrow batch is one numpy
-    matmul + stable argsort — at k=4k-65k this beats the interpreted
-    per-row array expression of :func:`assign_ivf_buckets` by orders of
-    magnitude while staying a narrow stage (no shuffle).
-
-    The ranking is (-dot/norm, cid) like the expression engine
-    (stable argsort over cid-ascending columns = lexicographic), but
-    numpy's pairwise float summation can differ from the sequential
-    fold in the last ulp — on exact ties the engines may pick different
-    centroids. Use the expression engine where bit-exact oracle parity
-    matters; this one for production scale."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rows = sorted(
-        ((int(r["cid"]), [float(x) for x in r["cvec"]]) for r in centroids.collect())
-    )
-    cids = np.array([c for c, _ in rows], dtype=np.int64)
-    M = np.array([v for _, v in rows], dtype=np.float64)  # (k, dim), cid-ascending
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((cids, M))
-
-    out_schema = T.StructType(list(df.schema.fields) + [T.StructField(out_col, T.LongType())])
-    cols = df.columns
-
-    def run(batches):
-        b_cids, b_M = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            negs = -(V @ b_M.T) / np.linalg.norm(V, axis=1, keepdims=True)
-            idx = np.argsort(negs, axis=1, kind="stable")[:, :nprobe]
-            out = pdf.loc[np.repeat(pdf.index, nprobe)].reset_index(drop=True)
-            out[out_col] = b_cids[idx].ravel()
-            yield out[cols + [out_col]]
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def ivf_centroids(
     corpus: DataFrame, id_col: str, vec_col: str, n_centroids: int = 16
 ) -> DataFrame:

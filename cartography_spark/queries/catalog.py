@@ -56,6 +56,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from cartography_spark.queries.oracles import DRIVER_PAGES
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -1577,7 +1579,7 @@ def dedup_retention_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.graphrank import maximal_independent_set
 
     docs = _t(spark, sf_dir, "documents")
-    if _pages_n(sf_dir) > 500:
+    if _pages_n(sf_dir) > DRIVER_PAGES:
         docs = docs.where(F.col("doc_id") % 5 == 0)
     pairs = ngram_jaccard_pairs(
         docs, "doc_id", "text", "lang", shingle_n=3, threshold=0.6
@@ -1936,17 +1938,17 @@ def kg_flagship_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pages_n(sf_dir: str) -> int:
     """Page count for the e2e extraction gates, keyed off the sf dir
     (round 5, VERDICT #5: the gate must cover the chain at its own
-    scale, not a fixed n=500). 500 at sf<=0.01 — matching the static
-    DuckDB oracle the driver compares against at its gate scale — and
-    50k x sf above it (5 000 at sf0.1), so the BENCH run exercises the
-    chain at bench scale."""
+    scale, not a fixed n=500). ``DRIVER_PAGES`` (500) at sf<=0.01 —
+    matching the static DuckDB oracle the driver compares against at
+    its gate scale — and 50k x sf above it (5 000 at sf0.1), so the
+    BENCH run exercises the chain at bench scale."""
     import re as _re
 
     # \d+(\.\d+)? — not [0-9.]+ — so 'sf0.1.bak' parses as 0.1 instead
     # of crashing float() on '0.1.'
     m = _re.search(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
     sf = float(m.group(1)) if m else 0.01
-    return max(500, int(50_000 * sf))
+    return max(DRIVER_PAGES, int(50_000 * sf))
 
 
 def _pages_e2e(spark: SparkSession, n_pages: int, seed: int) -> DataFrame:
@@ -1957,15 +1959,11 @@ def _pages_e2e(spark: SparkSession, n_pages: int, seed: int) -> DataFrame:
     green hash row proves the whole html->text->triples chain emits
     exactly the planted triples (the north rule's P=R=1.0,
     driver-visible)."""
-    from cartography_spark.functions.textextract import extract_text
-    from cartography_spark.functions.triples import extract_triples
-    from cartography_spark.sources.pages import synthesize_pages
+    from cartography_spark.pipeline.flagship import page_triples
 
-    pages = synthesize_pages(spark, n_pages, seed=seed)
-    text = extract_text(pages.drop("text"), "html", "text")
-    triples = extract_triples(text)
     return (
-        triples.groupBy("subj", "pred", "obj")
+        page_triples(spark, n_pages, seed=seed)
+        .groupBy("subj", "pred", "obj")
         .agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), "subj", "pred", "obj")
         .limit(100)
@@ -2188,13 +2186,10 @@ _CRAWL_CALENDAR = ("2025-01-01", "2025-02-01")
 def _crawl_tagged_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """html -> text -> triples -> crawl-tagged distinct fact
     assertions, the shared front half of the temporal-fact gates."""
-    from cartography_spark.functions.textextract import extract_text
-    from cartography_spark.functions.triples import extract_triples
     from cartography_spark.operators.temporalkg import assign_crawl, fact_snapshots
-    from cartography_spark.sources.pages import synthesize_pages
+    from cartography_spark.pipeline.flagship import page_triples
 
-    pages = synthesize_pages(spark, _pages_n(sf_dir), seed=42)
-    triples = extract_triples(extract_text(pages.drop("text"), "html", "text"))
+    triples = page_triples(spark, _pages_n(sf_dir), seed=42)
     return fact_snapshots(assign_crawl(triples, _CRAWL_CALENDAR))
 
 
@@ -2321,15 +2316,11 @@ def kg_fact_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmaxes — a green hash pins the voting spec (round-0 majority,
     Laplace source accuracy, round-6-before-argmax weighting) against
     a different implementation, on top of the extraction plant."""
-    from cartography_spark.functions.textextract import extract_text
-    from cartography_spark.functions.triples import extract_triples_jvm
     from cartography_spark.functions.weblinks import url_host
     from cartography_spark.operators.factfusion import fuse_facts
-    from cartography_spark.sources.pages import synthesize_pages
+    from cartography_spark.pipeline.flagship import page_triples
 
-    pages = synthesize_pages(spark, _pages_n(sf_dir), seed=42)
-    text = extract_text(pages.drop("text"), "html", "text")
-    triples = extract_triples_jvm(text).select(
+    triples = page_triples(spark, _pages_n(sf_dir), seed=42).select(
         url_host("url").alias("source"), "subj", "pred", "obj"
     )
     return fuse_facts(triples)

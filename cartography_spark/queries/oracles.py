@@ -3223,12 +3223,13 @@ FROM d CROSS JOIN g
 
 # ---------------------------------------------------------------------------
 # Page-count-keyed twins. These gates run the catalog at
-# ``catalog._pages_n(sf_dir)`` pages (500 at the driver's sf0.01 gate,
-# 50k x sf above it), so their oracle is a builder of that count. ORACLES
-# serves each at DRIVER_PAGES; scripts/check_oracle.py rebuilds the same
-# builders at its own sf dir's count, so a gate cannot be green in one
-# and stale in the other. Every builder's seed defaults to the
-# catalog's 42.
+# ``catalog._pages_n(sf_dir)`` pages (DRIVER_PAGES at the driver's sf0.01
+# gate, 50k x sf above it), so their oracle is a builder of that count.
+# ORACLES serves each at DRIVER_PAGES; scripts/check_oracle.py rebuilds
+# the same builders at its own sf dir's count, so a gate cannot be green
+# in one and stale in the other. Every builder's seed defaults to the
+# catalog's 42. catalog.py imports DRIVER_PAGES, so the driver scale is
+# written once.
 # ---------------------------------------------------------------------------
 DRIVER_PAGES = 500
 SF_KEYED_ORACLES: dict[str, Callable[[int], str]] = {

@@ -13,9 +13,11 @@ scales from 1k rows (unit tests) to tens of millions (bench).
 
 Determinism: every field of row ``i`` is a pure function of ``(seed, i)``
 via splitmix64-style integer mixing — no RNG object, no partition-order
-dependence, fully vectorized in numpy inside ``mapInPandas``. The same
-(seed, n) always yields the same table regardless of parallelism, which
-is what makes the two-cluster-size scaling runs comparable.
+dependence. The key mixing is vectorized in numpy inside one
+``mapInPandas``, the only Python worker of the flagship chain
+(``pipeline/flagship.py``); the benchmark and ``bench.py`` materialize
+the pages first, so they time the JVM extraction alone. The same
+(seed, n) always yields the same table regardless of parallelism.
 
 Skew (deliberate, per the web-scale contract): domains and entities are
 Zipf-distributed — the top-2 domains carry >=40% of pages and the hot
@@ -167,17 +169,6 @@ def _page_batch(ids: np.ndarray, seed: int) -> pd.DataFrame:
     )
 
 
-def synthesize_pages_stage(seed: int = 42):
-    """Fusable Arrow stage (functions/fuse.py): id batches -> page
-    batches; pure function of (seed, id)."""
-
-    def gen(batches):
-        for pdf in batches:
-            yield _page_batch(pdf["id"].to_numpy(), seed)
-
-    return gen
-
-
 def synthesize_pages(
     spark: SparkSession, n: int, seed: int = 42, partitions: int | None = None
 ) -> DataFrame:
@@ -185,9 +176,12 @@ def synthesize_pages(
 
     The generator runs on executors (no driver-side loop); row content
     depends only on (seed, id), so output is identical at any
-    parallelism — required for the N vs 4N scaling comparison.
-    """
+    parallelism (tests/test_triples_paths.py checks two partitionings)."""
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
-    base = spark.range(0, n, 1, partitions)
-    return base.mapInPandas(synthesize_pages_stage(seed), schema=PAGES_SCHEMA)
+
+    def gen(batches):
+        for pdf in batches:
+            yield _page_batch(pdf["id"].to_numpy(), seed)
+
+    return spark.range(0, n, 1, partitions).mapInPandas(gen, schema=PAGES_SCHEMA)

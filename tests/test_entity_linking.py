@@ -53,11 +53,11 @@ def test_candidate_pairs_rejects_unknown_family(spark):
         candidate_pairs(df, "eid", "name", family="xxhash64")
 
 
-def test_link_entities_arrow_family_same_canonical_ids(store):
-    """The arrow blocking/verify kernels (the default family) plug into
-    the store-integrated flow and produce the expected canonical
-    assignment."""
-    out = link_entities(store, "Entity", "name", 200, threshold=0.7, family="arrow")
+def test_link_entities_md5_family_same_canonical_ids(store):
+    """The md5 oracle-family blocking/verify kernels plug into the
+    store-integrated flow and produce the same canonical assignment as
+    the default arrow family (test_link_entities_canonicalizes)."""
+    out = link_entities(store, "Entity", "name", 200, threshold=0.7, family="md5")
     assert out["linked_nodes"] >= 5
     rows = {
         r["id"]: (r["props"] or {}).get("canonical_id")

@@ -71,6 +71,16 @@ def test_cli_sync_and_resweep(spark, tmp_path, capsys):
     assert all(v == "skipped(resume)" for v in out2["stages"].values())
 
 
+def test_cli_flagship_counts_page_triples(spark, capsys):
+    from cartography_spark.cli import main
+    from cartography_spark.pipeline.flagship import page_triples
+
+    assert main(["flagship", "--pages", "300"]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["pages"] == 300
+    assert out["triples"] == page_triples(spark, 300, seed=42).count() > 0
+
+
 def test_multi_round_lifecycle_with_drift_and_gc(spark, tmp_path, capsys):
     """Capstone: three sync rounds through the CLI with a shrinking
     corpus, drift-state snapshots between rounds, and retention GC at

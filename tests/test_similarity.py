@@ -124,29 +124,6 @@ def test_train_ivf_centroids_shape(spark, corpus):
     assert assigned.select("ivf_bucket").distinct().count() >= 2
 
 
-def test_ivf_arrow_engine_agrees_with_expression(spark, corpus):
-    """The BLAS (Arrow) assignment must agree with the expression
-    engine on clustered vectors (ties are the only divergence channel;
-    none exist here), for nprobe 1 and 2."""
-    from cartography_spark.operators.similarity import (
-        assign_ivf_buckets,
-        assign_ivf_buckets_arrow,
-        ivf_centroids,
-    )
-
-    cents = ivf_centroids(corpus, "vec_id", "embedding", n_centroids=8)
-    for nprobe in (1, 2):
-        expr = {
-            (r["vec_id"], r["ivf_bucket"])
-            for r in assign_ivf_buckets(corpus, "embedding", cents, nprobe=nprobe).collect()
-        }
-        arrow = {
-            (r["vec_id"], r["ivf_bucket"])
-            for r in assign_ivf_buckets_arrow(corpus, "embedding", cents, nprobe=nprobe).collect()
-        }
-        assert expr == arrow
-
-
 def test_pair_dot_arrow_bit_identical_to_expression_fold(spark):
     """pair_dot_arrow must equal dot()'s interpreted fold EXACTLY
     (not approximately): same elementwise double cast, same sequential

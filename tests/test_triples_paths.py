@@ -1,13 +1,18 @@
-"""The pandas (Arrow UDF) and JVM (codegen regex) triple extractors must
-be output-identical; extraction must be byte-identical per url across
-partitionings (the engine's per-row invariant)."""
+"""The flagship chain's JVM triple extractor must match the Python
+sentence oracle on a synthesized corpus; the chain must emit exactly the
+triples of the generator's golden text; extraction must be
+byte-identical per url across partitionings (the engine's per-row
+invariant)."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pytest
 
 from cartography_spark.functions.textextract import extract_text
-from cartography_spark.functions.triples import extract_triples, extract_triples_jvm
+from cartography_spark.functions.triples import SENTENCE_RE, extract_triples_jvm
+from cartography_spark.pipeline.flagship import page_triples
 from cartography_spark.sources.pages import synthesize_pages
 
 
@@ -17,22 +22,21 @@ def text_df(spark):
     return extract_text(pages.drop("text"), "html", "text").cache()
 
 
-def test_jvm_and_pandas_paths_identical(text_df):
-    a = extract_triples(text_df)
-    b = extract_triples_jvm(text_df)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    assert a.count() > 0
-
-
-def test_fused_pipeline_identical_to_modular(spark):
-    from cartography_spark.pipeline.flagship import page_triples, page_triples_fused
-
-    a = page_triples(spark, 250, seed=9)
-    b = page_triples_fused(spark, 250, seed=9, partitions=5)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    assert b.count() > 0
+def test_jvm_extraction_matches_sentence_oracle(text_df):
+    """Corpus-scale parity: every (url, warc_ts, subj, pred, obj) row,
+    with multiplicity, equals SENTENCE_RE's matches over the same
+    extracted text (pred spaces -> ``_``)."""
+    oracle = Counter(
+        (r["url"], r["warc_ts"], m["subj"], m["pred"].replace(" ", "_"), m["obj"])
+        for r in text_df.select("url", "warc_ts", "text").collect()
+        for m in SENTENCE_RE.finditer(r["text"])
+    )
+    got = Counter(
+        (r["url"], r["warc_ts"], r["subj"], r["pred"], r["obj"])
+        for r in extract_triples_jvm(text_df).collect()
+    )
+    assert sum(oracle.values()) > 0
+    assert got == oracle
 
 
 def test_triple_precision_recall_vs_reference(spark):
@@ -42,7 +46,7 @@ def test_triple_precision_recall_vs_reference(spark):
     Both per (url, subj, pred, obj)."""
     pages = synthesize_pages(spark, 400, seed=77)
     reference = extract_triples_jvm(pages.select("url", "warc_ts", "text"))
-    pipeline = extract_triples(extract_text(pages.drop("text"), "html", "text"))
+    pipeline = page_triples(spark, 400, seed=77)
     ref_n = reference.count()
     pipe_n = pipeline.count()
     false_pos = pipeline.exceptAll(reference).count()
