@@ -314,7 +314,7 @@ def run_store_bench(spark) -> dict:
             if any(b["seq"] not in keep for b in info["buckets"].values())
         }
         t0 = time.time()
-        store.defrag("nodes", max_seq_spread=None, max_seq_groups=2)
+        store.defrag("nodes", max_seq_groups=2)
         defrag_sec = time.time() - t0
         man_d1 = store._manifest("nodes")
         defrag_rewritten = sum(

@@ -110,7 +110,7 @@ def changed_partitions(man_start: dict | None, man_end: dict | None) -> list[str
         return frozenset(
             d["path"]
             for d in (man or {}).get("deletes", [])
-            if min_seq < d["seq"] and p in d.get("partitions", [p])
+            if min_seq < d["seq"] and p in d["partitions"]
         )
 
     out = []

@@ -141,7 +141,7 @@ class AnalysisJob:
         self, nodes: DataFrame, edges: DataFrame, params: Mapping[str, Any]
     ) -> set | None:
         """Union of every step's touched labels, or None when any step
-        can't bound its write set (forces the legacy full rewrite).
+        can't bound its write set (forces the whole-table rewrite).
 
         All plain-predicate statements (set_prop/remove_prop) are
         evaluated in ONE conditional-aggregation scan grouped by label
@@ -235,16 +235,25 @@ class AnalysisJob:
     def run(
         self, store: GraphStore, update_tag: int, params: Mapping[str, Any] | None = None
     ) -> dict[str, Any]:
+        """Run the steps and commit their result as ONE store version
+        (the reference commits per statement; one commit keeps the
+        rewrite atomic). The read, the steps and the rewrites form one
+        store transaction unit, re-run whole on a concurrent commit.
+
+        With a bounded touched-label set only those partitions are read
+        and rewritten (:meth:`GraphStore.replace_partitions`); an empty
+        set writes no node at all; an unbounded one rewrites the whole
+        node table. The edge table is rewritten whole when a step
+        declares it touches edges. Returns the job name, step names,
+        per-statement counters and the touched labels (None for a
+        whole-table rewrite)."""
         params = dict(params or {})
         touches_edges = any(s.touches_edges for s in self.steps)
 
         def once() -> tuple[set | None, bool]:
-            """Read -> steps -> write -> stage, re-run whole on a
-            conflict by ``store._transact``."""
             self._observations = []
             full_nodes, edges = store.read_nodes(), store.read_edges()
             touched = self._touched_labels(full_nodes, edges, params)
-            manifest = store._manifest("nodes") or {"partitions": {}, "deletes": []}
             if touched is None:
                 nodes = full_nodes
             else:
@@ -253,66 +262,18 @@ class AnalysisJob:
                 # labels pass through the steps unchanged, and every
                 # untouched partition carries forward by reference.
                 nodes = store._read_manifest_df(
-                    "nodes", NODES_SCHEMA, manifest, only_partitions=sorted(touched)
+                    "nodes", NODES_SCHEMA, store._manifest("nodes"), only_partitions=sorted(touched)
                 )
             for step in self.steps:
                 nodes, edges = step.fn(nodes, edges, params)
-
-            # Promoted-column evolution (columns/columns_seq/columns_types)
-            # rides every commit via the store's single helper.
-            _evolution = store._evolve_columns
-
-            commits: dict[str, tuple[str, dict]] = {}
-            nb = store._bucket_count(manifest)
+            # The rewrites join this unit's transaction: one commit.
             if touched is None:
-                nv = store._allocate_version("nodes")
-                nparts = store._write_data("nodes", nv, nodes, nb)
-                commits["nodes"] = (
-                    nv,
-                    {
-                        "partitions": nparts,
-                        "deletes": [],
-                        "bucket_count": nb,
-                        **_evolution(manifest, nodes, nv),
-                    },
-                )
+                store._write("nodes", nodes)
             elif touched:
-                nv = store._allocate_version("nodes")
-                nparts = store._write_data("nodes", nv, nodes, nb)
-                parts = {
-                    k: p for k, p in manifest["partitions"].items() if k not in touched
-                }
-                parts.update(nparts)
-                commits["nodes"] = (
-                    nv,
-                    {
-                        "partitions": parts,
-                        "deletes": list(manifest.get("deletes", [])),
-                        "bucket_count": nb,
-                        **_evolution(manifest, nodes, nv),
-                    },
-                )
-            # touched == set(): no statement matches any label -> no node write
+                store.replace_partitions("nodes", nodes, sorted(touched))
             if touches_edges:
-                emanifest = store._manifest("edges") or {}
-                eb = store._bucket_count(emanifest)
-                ev = store._allocate_version("edges")
-                eparts = store._write_data("edges", ev, edges, eb)
-                commits["edges"] = (
-                    ev,
-                    {
-                        "partitions": eparts,
-                        "deletes": [],
-                        "bucket_count": eb,
-                        **_evolution(emanifest, edges, ev),
-                    },
-                )
-            if commits:
-                # ONE atomic commit for the whole job (the reference
-                # commits per statement; one commit keeps the rewrite
-                # atomic), published when the unit's transaction exits.
-                store._commit_manifests(commits)
-            return touched, "nodes" in commits
+                store._write("edges", edges)
+            return touched, touched is None or bool(touched)
 
         touched, nodes_written = store._transact(once)
         # Per-statement counters (reference: GraphStatement counters

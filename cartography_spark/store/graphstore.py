@@ -45,8 +45,20 @@ key deleted then re-merged is NOT re-deleted at read time).
   re-bucket. Local tests default to 16; size N for the target scale
   (label_bytes / N ≈ a few GB, e.g. 1024-4096 at 100 TB).
 - ``sweep`` writes tombstone key files (merge-on-read DELETE) — no
-  table rewrite at all. ``compact`` folds tombstones into a fresh full
-  snapshot.
+  table rewrite at all. ``compact`` folds them into rewrites of only
+  the buckets some tombstone still applies to (``compact(full=True)``
+  rewrites the whole table); ``defrag`` re-homes the bucket entries of
+  minority write seqs.
+- ONE rewrite primitive, :meth:`GraphStore._rewrite`: every data
+  rewrite (merge, ``replace_partitions``, the whole-table write,
+  ``defrag``, compaction; analysis jobs through the first two) hands it
+  a DataFrame and the scope that DataFrame supersedes — bucket ids per
+  partition, whole partitions, or the whole table. It writes one new
+  data version, carries every entry outside the scope forward by
+  reference, derives any declared promoted column the DataFrame lacks,
+  unions the column declarations, keeps the pinned bucket count and the
+  tombstones (a whole-table rewrite re-buckets to ``n_buckets`` and
+  clears them), and stages the manifest.
 - Every mutation writes a new manifest and atomically swaps the CURRENT
   pointer (os.replace) — snapshot isolation + time travel, which is
   what drift detection (§2.7 X2) and resume read.
@@ -499,10 +511,6 @@ class GraphStore:
         with self.transaction():
             return unit()
 
-    def _commit_manifest(self, table: str, version: str, manifest: dict) -> None:
-        """Stage one table's manifest into the open transaction."""
-        self._commit_manifests({table: (version, manifest)})
-
     def _commit_manifests(self, commits: dict[str, tuple[str, dict]]) -> None:
         """Stage manifests for one or MORE tables into the open
         :meth:`transaction`, which publishes them in a single CAS pointer
@@ -561,43 +569,6 @@ class GraphStore:
         return sorted(os.path.splitext(f)[0] for f in os.listdir(d)) if os.path.isdir(d) else []
 
     # ---------- reads ----------
-
-    def _evolve_columns(
-        self,
-        manifest: dict | None,
-        df: DataFrame,
-        version: str,
-        restrict_to_df: bool = False,
-    ) -> dict:
-        """The promoted-column evolution block every commit carries:
-        ``columns`` (declared ``_p_`` columns), ``columns_seq`` (the
-        version seq each was first declared at — gates the read-side
-        props fallback), ``columns_types`` (Spark DDL type, fixed at
-        first declaration). ``restrict_to_df=True`` is the compaction
-        full-snapshot case where ``df`` IS the whole table; otherwise
-        the declarations union with what the manifest already carries.
-        Raises on a type conflict — schema evolution adds columns, it
-        never retypes them."""
-        man = manifest or {}
-        df_promoted = {c for c in df.columns if c.startswith("_p_")}
-        cols = sorted(
-            df_promoted if restrict_to_df else set(man.get("columns", [])) | df_promoted
-        )
-        seqs = {c: s for c, s in man.get("columns_seq", {}).items() if c in cols}
-        types = {c: t for c, t in man.get("columns_types", {}).items() if c in cols}
-        for c in cols:
-            seqs.setdefault(c, int(version[1:]))
-            if c in df.columns:
-                t = df.schema[c].dataType.simpleString()
-                prev = types.setdefault(c, t)
-                if prev != t:
-                    raise ValueError(
-                        f"promoted column {c} is declared {prev!r}; this write "
-                        f"carries {t!r} — promoted columns are never retyped"
-                    )
-            else:
-                types.setdefault(c, "string")
-        return {"columns": cols, "columns_seq": seqs, "columns_types": types}
 
     @staticmethod
     def _promoted_type(manifest: dict, col: str) -> T.DataType:
@@ -709,12 +680,11 @@ class GraphStore:
             # disjoint from THIS group's dirs cannot match any of its
             # rows, so its anti-join is dropped from the plan — e.g.
             # after sweeping one label, scans of file groups holding
-            # only other labels read with no anti-join at all. Entries
-            # without a recorded scope (none are written today) are
-            # conservatively applied. Safe vs re-bucketing: the only
-            # path that changes bucket_count is the full-snapshot
-            # compaction, which folds and CLEARS deletes — so recorded
-            # bucket ids always correspond to the live layout.
+            # only other labels read with no anti-join at all. Safe vs
+            # re-bucketing: the only path that changes bucket_count is
+            # the whole-table rewrite, which folds and CLEARS deletes —
+            # so recorded bucket ids always correspond to the live
+            # layout.
             group_pb = set()
             for dd in dirs:
                 comps = dd.split("/")
@@ -726,10 +696,7 @@ class GraphStore:
                 )
 
             def overlaps(d: dict) -> bool:
-                bmap = d.get("buckets")
-                if bmap is None:
-                    return True
-                return any(p in bmap and b in bmap[p] for p, b in group_pb)
+                return any(b in d["buckets"].get(p, ()) for p, b in group_pb)
 
             dels = [
                 d
@@ -857,40 +824,108 @@ class GraphStore:
                 parts[pval] = {"buckets": buckets}
         return parts
 
+    def _rewrite(
+        self,
+        table: str,
+        df: DataFrame,
+        scope: dict[str, set[int] | None] | None,
+        keep_delete: Callable[[dict, dict], bool] | None = None,
+    ) -> str:
+        """The rewrite primitive: write ``df`` as a new data version of
+        ``table`` and stage the manifest that swaps it in for ``scope``,
+        inside the caller's open transaction; returns the version. Every
+        data rewrite of the store (merge, :meth:`replace_partitions`, the
+        full snapshot, :meth:`defrag`, compaction) goes through here.
+
+        ``scope`` is what ``df`` supersedes: ``None`` for the whole
+        table, else a map from partition value to bucket ids (``None``
+        for every bucket of the partition). Entries in the scope drop
+        out; every (partition, bucket) entry the write produces takes
+        the place of the entry with its key, or is appended; every other
+        entry carries forward by reference, and a partition left without
+        buckets drops out.
+
+        A whole-table rewrite writes at this handle's ``n_buckets`` (the
+        only re-bucketing path) and clears the tombstones, which ``df``
+        already folded in. Any other rewrite keeps the pinned bucket
+        count and carries the tombstones forward: by sequence-number
+        semantics they stop applying to the rewritten entries.
+        ``keep_delete(delete, partitions)`` filters them against the new
+        partition map (compaction prunes the ones nothing is left for).
+
+        A promoted column the manifest declares but ``df`` lacks is
+        added, so ``_write_data`` derives it from props like every other
+        (otherwise the rewritten files would NULL-fill it at a seq past
+        its declaration, with no props fallback, and matcher lookups
+        would silently miss). The declarations are the union of the
+        manifest's and ``df``'s; a type conflict raises — schema
+        evolution adds columns, it never retypes them."""
+        manifest = self._manifest(table) or {"partitions": {}, "deletes": []}
+        for c in manifest.get("columns", []):
+            if c not in df.columns:
+                df = df.withColumn(c, F.lit(None).cast(self._promoted_type(manifest, c)))
+        whole = scope is None
+        nb = self.n_buckets if whole else self._bucket_count(manifest)
+        v = self._allocate_version(table)
+        cols = sorted(c for c in df.columns if c.startswith("_p_"))
+        seqs = dict(manifest.get("columns_seq", {}))
+        types = dict(manifest.get("columns_types", {}))
+        for c in cols:
+            seqs.setdefault(c, int(v[1:]))
+            t = df.schema[c].dataType.simpleString()
+            if types.setdefault(c, t) != t:
+                raise ValueError(
+                    f"promoted column {c} is declared {types[c]!r}; this write "
+                    f"carries {t!r} — promoted columns are never retyped"
+                )
+        parts = {
+            p: {
+                "buckets": {
+                    b: e for b, e in info["buckets"].items() if int(b) not in (scope.get(p) or ())
+                }
+            }
+            for p, info in ({} if whole else manifest["partitions"]).items()
+            if p not in scope or scope[p] is not None
+        }
+        for p, info in self._write_data(table, v, df, nb).items():
+            parts.setdefault(p, {"buckets": {}})["buckets"].update(info["buckets"])
+        parts = {p: i for p, i in parts.items() if i["buckets"]}
+        deletes = [] if whole else [
+            d for d in manifest.get("deletes", []) if keep_delete is None or keep_delete(d, parts)
+        ]
+        self._commit_manifests(
+            {
+                table: (
+                    v,
+                    {
+                        "partitions": parts,
+                        "deletes": deletes,
+                        "bucket_count": nb,
+                        "columns": cols,
+                        "columns_seq": seqs,
+                        "columns_types": types,
+                    },
+                )
+            }
+        )
+        return v
+
     def _write(self, table: str, df: DataFrame) -> str:
-        """Full-snapshot write: every partition fresh, tombstones folded
-        in (the compaction path), as one :meth:`_transact` unit."""
-
-        def once() -> str:
-            old_man = self._manifest(table) or {}
-            v = self._allocate_version(table)
-            # A full snapshot rewrites every bucket, so it may RE-bucket to
-            # this store handle's n_buckets (the only layout-change path).
-            parts = self._write_data(table, v, df, self.n_buckets)
-            self._commit_manifest(
-                table,
-                v,
-                {
-                    "partitions": parts,
-                    "deletes": [],
-                    "bucket_count": self.n_buckets,
-                    **self._evolve_columns(old_man, df, v, restrict_to_df=True),
-                },
-            )
-            return v
-
-        return self._transact(once)
+        """Whole-table rewrite: ``df`` is the new content of every
+        partition, as one :meth:`_transact` unit."""
+        return self._transact(functools.partial(self._rewrite, table, df, None))
 
     def replace_partitions(self, table: str, df: DataFrame, partitions: list[str]) -> str:
         """Partial rewrite: ``df`` is the complete new content of the
         named ``partitions``; every OTHER partition carries forward by
-        manifest reference — zero copy (the same shape ``_merge`` uses;
-        exposed for analysis jobs, whose rewrites touch a few labels of
-        a 100 TB table). Existing tombstone files carry forward: they
-        are older than the new data version, so by sequence-number
-        semantics they keep applying to untouched partitions and stop
-        applying to the rewritten ones (whose content already folded
-        them in at read time).
+        manifest reference — zero copy (analysis jobs rewrite the few
+        labels they touch of a 100 TB table this way). Existing
+        tombstone files carry forward: they are older than the new data
+        version, so by sequence-number semantics they keep applying to
+        untouched partitions and stop applying to the rewritten ones
+        (whose content already folded them in at read time). A declared
+        promoted column ``df`` omits is derived from props (see
+        :meth:`_rewrite`).
 
         One :meth:`_transact` unit: a losing race re-runs against the
         winner's manifest, so a concurrent merge's commit is never
@@ -901,42 +936,8 @@ class GraphStore:
         :meth:`transaction` around that read and this call, so the
         conflict surfaces at its exit instead."""
         return self._transact(
-            functools.partial(self._replace_partitions_once, table, df, partitions)
+            functools.partial(self._rewrite, table, df, dict.fromkeys(partitions))
         )
-
-    def _replace_partitions_once(self, table: str, df: DataFrame, partitions: list[str]) -> str:
-        manifest = self._manifest(table) or {"partitions": {}, "deletes": []}
-        # A df omitting a DECLARED promoted column would write partition
-        # files lacking it at seq >= columns_seq — reads would NULL-fill
-        # with no props fallback and matcher joins silently miss rows
-        # (round 4, ADVICE fix). Derive the missing ones from props; the
-        # write invariant in _write_data then re-derives values as for
-        # any other write.
-        if "props" in df.columns:
-            for c in manifest.get("columns", []):
-                if c not in df.columns:
-                    df = df.withColumn(
-                        c,
-                        F.element_at(F.col("props"), c[len("_p_"):]).try_cast(
-                            self._promoted_type(manifest, c)
-                        ),
-                    )
-        nb = self._bucket_count(manifest)
-        v = self._allocate_version(table)
-        new_parts = self._write_data(table, v, df, nb)
-        parts = {k: p for k, p in manifest["partitions"].items() if k not in set(partitions)}
-        parts.update(new_parts)
-        self._commit_manifest(
-            table,
-            v,
-            {
-                "partitions": parts,
-                "deletes": list(manifest.get("deletes", [])),
-                "bucket_count": nb,
-                **self._evolve_columns(manifest, df, v),
-            },
-        )
-        return v
 
     _METRICS_DDL = "op string, update_tag long, wall_ts double, counters map<string,long>"
 
@@ -1111,8 +1112,7 @@ class GraphStore:
                 new = new.withColumn(
                     c, F.lit(None).cast(self._promoted_type(manifest, c))
                 )
-        v = self._allocate_version(table)
-        obs = Observation(f"merge_{table}_{v}")
+        obs = Observation()
         result = (
             merge_frames(old, new, key, cols, update_tag, with_flags=True)
             .observe(
@@ -1123,30 +1123,11 @@ class GraphStore:
             )
             .drop("__created", "__updated")
         )
-        evolution = self._evolve_columns(manifest, result, v)
-        # counters fold into this job
-        new_parts = self._write_data(table, v, result, nb)
-        # Bucket-granular manifest update: untouched buckets of a
-        # touched partition carry forward BY REFERENCE — their
-        # entries stay byte-identical across the merge.
-        parts = {
-            p: {"buckets": dict(i["buckets"])}
-            for p, i in manifest["partitions"].items()
-        }
-        for pval, pinfo in new_parts.items():
-            parts.setdefault(pval, {"buckets": {}})["buckets"].update(
-                pinfo["buckets"]
-            )
-        self._commit_manifest(
-            table,
-            v,
-            {
-                "partitions": parts,
-                "deletes": list(manifest.get("deletes", [])),
-                "bucket_count": nb,
-                **evolution,
-            },
-        )
+        # The counters fold into the write job. A merge removes no row,
+        # so it writes every bucket it touched and supersedes nothing
+        # else (an empty scope): each written entry takes the place of
+        # the touched one, untouched buckets carry forward by reference.
+        v = self._rewrite(table, result, {})
         got = obs.get
         return {
             "rows_total": int(got["rows"] or 0),
@@ -1231,7 +1212,7 @@ class GraphStore:
         with self.transaction():
             n, v, man = self._prepare_deletes(table, keys)
             if n:
-                self._commit_manifest(table, v, man)
+                self._commit_manifests({table: (v, man)})
         return n, v
 
     # ---------- cleanup sweep (C1-C6) ----------
@@ -1465,20 +1446,10 @@ class GraphStore:
                 out.update(self.compact(t))
                 man = self._manifest(t)
             if man is not None and self._seq_group_count(man) > max_seq_groups:
-                # Pass the trigger's own bound through so the action is
-                # guaranteed to clear it (<= max_seq_groups after), even
-                # when every partition is internally seq-homogeneous —
-                # otherwise the trigger could re-fire forever over a
-                # no-op defrag. Spread is DISABLED on this path: the
-                # read-plan cost is the table-wide seq count, and the
-                # spread criterion's whole-partition rewrite unit would
-                # re-materialize a huge label (always internally
-                # fragmented after any small merge) on every maintenance
-                # cycle — the bucket-granular bound alone both clears
-                # the trigger and pays only minority-seq bytes.
-                out.update(
-                    self.defrag(t, max_seq_spread=None, max_seq_groups=max_seq_groups)
-                )
+                # The trigger's own bound: the defrag is guaranteed to
+                # clear it, so maintenance converges instead of
+                # re-firing.
+                out.update(self.defrag(t, max_seq_groups))
         return out
 
     @staticmethod
@@ -1491,131 +1462,45 @@ class GraphStore:
             }
         )
 
-    def defrag(
-        self,
-        table: str,
-        max_seq_spread: int | None = 1,
-        max_seq_groups: int | None = None,
-    ) -> dict[str, str]:
-        """Consolidate read-plan fragmentation. Two criteria, both
-        applied in one :meth:`_transact` unit like compaction (a
-        concurrent commit re-runs the defrag against the winner's
-        snapshot); tombstones fold into whatever is rewritten (the new
-        seq postdates them) and keep applying to untouched entries;
-        entries dead everywhere are pruned at commit.
-
-        ``max_seq_spread``: every partition whose buckets span more
-        than this many distinct seqs is rewritten WHOLE (all its
-        buckets re-homed at one fresh seq) — the explicit
-        "make this partition contiguous" API. Pass ``None`` to skip.
-
-        ``max_seq_groups`` bounds the TABLE-WIDE distinct seq count —
-        the actual read-plan cost (one unioned scan per distinct seq
-        across all partitions, see ``_read_manifest_df``). Per-partition
-        spread alone cannot reduce it: 33 partitions each internally
-        homogeneous at 33 different seqs give a 33-way union the spread
-        criterion never touches. The heaviest (by manifest bytes)
+    def defrag(self, table: str, max_seq_groups: int) -> dict[str, str]:
+        """Bound read-plan fragmentation: at most ``max_seq_groups``
+        distinct write seqs across the table's bucket entries — the
+        actual read-plan cost (one unioned scan per distinct seq, see
+        ``_read_manifest_df``). The heaviest (by manifest bytes)
         ``max_seq_groups - 1`` seqs are kept in place, and ONLY the
-        individual bucket entries at any other seq are re-homed — a
-        bucket-granular rewrite, exactly the merge's unit, so a huge
-        label with one stray recently-merged bucket pays one bucket,
-        not the label (whole-partition re-homing here would re-create
-        the 100 TB-hostile shape the bucketed merge removed). Post-
-        defrag count is <= ``max_seq_groups`` (kept seqs + the one
-        fresh seq); rewrite cost tracks minority-seq bytes."""
+        individual bucket entries at any other seq are re-homed at one
+        fresh seq — a bucket-granular rewrite, exactly the merge's unit,
+        so a huge label with one stray recently-merged bucket pays one
+        bucket, not the label. Rewrite cost tracks minority-seq bytes.
+
+        One :meth:`_transact` unit like compaction (a concurrent commit
+        re-runs the defrag against the winner's snapshot); tombstones
+        fold into what is rewritten (the new seq postdates them) and
+        keep applying to untouched entries. Returns ``{table: version}``,
+        or ``{}`` when the table is already within the bound."""
 
         def once() -> dict[str, str]:
             manifest = self._manifest(table)
-            if manifest is None:
+            if manifest is None or self._seq_group_count(manifest) <= max_seq_groups:
                 return {}
-            parts = manifest["partitions"]
-            affected_set: set[str] = (
-                set()
-                if max_seq_spread is None
-                else {
-                    p
-                    for p, info in parts.items()
-                    if len(set(self._entry_seqs(info))) > max_seq_spread
-                }
+            bytes_per_seq: dict[int, int] = {}
+            for info in manifest["partitions"].values():
+                for b in info["buckets"].values():
+                    bytes_per_seq[b["seq"]] = bytes_per_seq.get(b["seq"], 0) + b.get("bytes", 0)
+            keep = set(
+                sorted(bytes_per_seq, key=bytes_per_seq.get, reverse=True)[
+                    : max(max_seq_groups - 1, 0)
+                ]
             )
             rehome: dict[str, set[int]] = {}
-            if max_seq_groups is not None:
-                untouched = {p: i for p, i in parts.items() if p not in affected_set}
-                kept_seqs = {s for i in untouched.values() for s in self._entry_seqs(i)}
-                if len(kept_seqs) + (1 if affected_set else 0) > max_seq_groups:
-                    bytes_per_seq: dict[int, int] = {}
-                    for info in untouched.values():
-                        for b in info["buckets"].values():
-                            bytes_per_seq[b["seq"]] = (
-                                bytes_per_seq.get(b["seq"], 0) + b.get("bytes", 0)
-                            )
-                    keep = set(
-                        sorted(bytes_per_seq, key=bytes_per_seq.get, reverse=True)[
-                            : max(max_seq_groups - 1, 0)
-                        ]
-                    )
-                    for p, info in untouched.items():
-                        for b, binfo in info["buckets"].items():
-                            if binfo["seq"] not in keep:
-                                rehome.setdefault(p, set()).add(int(b))
-            affected = sorted(affected_set)
-            if not affected and not rehome:
-                return {}
-            nb = self._bucket_count(manifest)
-            frames = []
-            if affected:
-                frames.append(
-                    self._read_manifest_df(
-                        table, _SCHEMA[table], manifest, only_partitions=affected
-                    )
-                )
-            if rehome:
-                frames.append(
-                    self._read_manifest_df(
-                        table,
-                        _SCHEMA[table],
-                        manifest,
-                        only_partitions=sorted(rehome),
-                        only_buckets=rehome,
-                    )
-                )
-            df = frames[0]
-            for f in frames[1:]:
-                df = df.unionByName(f)
-            v = self._allocate_version(table)
-            new_parts = self._write_data(table, v, df, nb)
-            merged: dict[str, dict] = {}
-            for p, i in parts.items():
-                if p in affected_set:
-                    continue  # replaced wholesale below (or dropped if empty)
-                if p in rehome:
-                    # bucket-granular carry-forward: kept-seq bucket
-                    # entries stay byte-identical; re-homed buckets take
-                    # their fresh entry, or drop out if fully tombstoned
-                    entry = {
-                        b: e
-                        for b, e in i["buckets"].items()
-                        if int(b) not in rehome[p]
-                    }
-                    entry.update(new_parts.get(p, {}).get("buckets", {}))
-                    if entry:
-                        merged[p] = {"buckets": entry}
-                else:
-                    merged[p] = i
-            for p, i in new_parts.items():
-                if p in affected_set:
-                    merged[p] = i  # fully-tombstoned partitions drop out
-            self._commit_manifest(
-                table,
-                v,
-                {
-                    "partitions": merged,
-                    "deletes": list(manifest.get("deletes", [])),
-                    "bucket_count": nb,
-                    **self._evolve_columns(manifest, df, v),
-                },
+            for p, info in manifest["partitions"].items():
+                for b, binfo in info["buckets"].items():
+                    if binfo["seq"] not in keep:
+                        rehome.setdefault(p, set()).add(int(b))
+            df = self._read_manifest_df(
+                table, _SCHEMA[table], manifest, only_partitions=sorted(rehome), only_buckets=rehome
             )
-            return {table: v}
+            return {table: self._rewrite(table, df, rehome)}
 
         return self._transact(once)
 
@@ -1627,22 +1512,23 @@ class GraphStore:
         and the compaction re-runs against the new snapshot (never
         clobbers a racing merge/sweep).
 
-        Default is PARTITION-SCOPED (the only shape that survives
-        100 TB): each tombstone entry records the partitions its keys
-        can touch, so only affected partitions are read (deletes fold in
-        at read time) and rewritten; every other partition carries
-        forward by reference, and tombstones that no longer apply to any
-        remaining older-seq partition are pruned from the manifest.
-        Compaction cost tracks tombstone-touched partitions, not table
-        size. ``full=True`` forces the legacy whole-table snapshot
-        (also re-sorts untouched partitions)."""
+        Default is BUCKET-SCOPED (the only shape that survives 100 TB):
+        each tombstone entry records the (partition, bucket) groups its
+        keys hash to, so only the groups some tombstone still applies to
+        are read (deletes fold in at read time) and rewritten; every
+        other bucket carries forward by reference, and tombstones that
+        no longer apply to any older-seq bucket are pruned from the
+        manifest. Compaction cost tracks tombstoned buckets, not table
+        size. ``full=True`` rewrites the whole table instead (folding
+        every tombstone, re-sorting every bucket and re-bucketing to
+        this handle's ``n_buckets``)."""
 
         def once(t: str) -> str | None:
             manifest = self._manifest(t)
             if manifest is None:
                 return None
             if full:
-                return self._write(t, self._read(t, _SCHEMA[t]))
+                return self._rewrite(t, self._read(t, _SCHEMA[t]), None)
             return self._compact_partial(t, manifest)
 
         out: dict[str, str] = {}
@@ -1657,85 +1543,41 @@ class GraphStore:
         Returns the new version, or None when nothing needed doing.
         Rewrite unit = the (partition, bucket) groups some tombstone can
         still apply to (bucket seq < delete seq, bucket in the delete's
-        recorded key-bucket set); every other bucket carries forward by
-        reference, so compaction cost tracks tombstoned buckets, not
-        table or even partition size."""
-        parts = manifest["partitions"]
-        deletes = list(manifest.get("deletes", []))
-        nb = self._bucket_count(manifest)
+        recorded key-bucket set)."""
+        deletes = manifest.get("deletes", [])
 
-        def scope(d: dict) -> list[str]:
-            # pre-round-3 tombstones lack the partition list: assume all
-            return d.get("partitions", list(parts))
+        def targets(d: dict, parts: dict) -> list[tuple[str, int]]:
+            """The (partition, bucket) entries tombstone ``d`` still
+            applies to in the partition map ``parts``."""
+            return [
+                (p, int(b))
+                for p, bs in d["buckets"].items()
+                if p in parts
+                for b, binfo in parts[p]["buckets"].items()
+                if int(b) in bs and binfo["seq"] < d["seq"]
+            ]
 
-        def bucket_scope(d: dict, p: str, partmap: dict) -> set:
-            # tombstones record the buckets their keys hash to; absent
-            # (older layouts) -> assume every bucket of the partition
-            bm = d.get("buckets")
-            if bm is None or p not in bm:
-                return {int(b) for b in partmap[p]["buckets"]}
-            return {int(b) for b in bm[p]}
-
-        def applies(d: dict, partmap: dict) -> bool:
-            return any(
-                binfo["seq"] < d["seq"]
-                for p in scope(d)
-                if p in partmap
-                for b, binfo in partmap[p]["buckets"].items()
-                if int(b) in bucket_scope(d, p, partmap)
-            )
-
-        affected: dict[str, set] = {}
+        affected: dict[str, set[int]] = {}
         for d in deletes:
-            for p in scope(d):
-                if p not in parts:
-                    continue
-                for b, binfo in parts[p]["buckets"].items():
-                    if int(b) in bucket_scope(d, p, parts) and binfo["seq"] < d["seq"]:
-                        affected.setdefault(p, set()).add(int(b))
-        if not affected:
-            # still prune tombstones that apply to nothing (e.g. their
-            # buckets were since rewritten by merges)
-            kept = [d for d in deletes if applies(d, parts)]
-            if len(kept) == len(deletes):
-                return None
-            v = self._allocate_version(table)
-            self._commit_manifest(
+            for p, b in targets(d, manifest["partitions"]):
+                affected.setdefault(p, set()).add(b)
+        if affected:
+            # deletes fold in at read time for the affected buckets
+            df = self._read_manifest_df(
                 table,
-                v,
-                {**manifest, "deletes": kept},
+                _SCHEMA[table],
+                manifest,
+                only_partitions=sorted(affected),
+                only_buckets=affected,
             )
-            return v
-        # deletes fold in at read time for the affected buckets
-        schema = _SCHEMA[table]
-        df = self._read_manifest_df(
-            table,
-            schema,
-            manifest,
-            only_partitions=sorted(affected),
-            only_buckets=affected,
-        )
+            return self._rewrite(
+                table, df, affected, keep_delete=lambda d, parts: bool(targets(d, parts))
+            )
+        # Nothing to rewrite: still prune tombstones that apply to
+        # nothing (e.g. their buckets were since rewritten by merges).
+        kept = [d for d in deletes if targets(d, manifest["partitions"])]
+        if len(kept) == len(deletes):
+            return None
         v = self._allocate_version(table)
-        new_parts = self._write_data(table, v, df, nb)
-        merged = {p: {"buckets": dict(i["buckets"])} for p, i in parts.items()}
-        for p, bs in affected.items():
-            for b in bs:
-                # a compacted-away bucket (every row tombstoned) must not
-                # carry its old entry forward; re-added below if the
-                # rewrite produced fresh data for it
-                merged[p]["buckets"].pop(str(b), None)
-        for p, pinfo in new_parts.items():
-            merged.setdefault(p, {"buckets": {}})["buckets"].update(pinfo["buckets"])
-        merged = {p: i for p, i in merged.items() if i["buckets"]}
-        kept = [d for d in deletes if applies(d, merged)]
-        self._commit_manifest(
-            table,
-            v,
-            {
-                "partitions": merged,
-                "deletes": kept,
-                "bucket_count": nb,
-                **self._evolve_columns(manifest, df, v),
-            },
-        )
+        self._commit_manifests({table: (v, {**manifest, "deletes": kept})})
         return v

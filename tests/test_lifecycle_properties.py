@@ -1,7 +1,7 @@
 """Property-based lifecycle test: ANY interleaving of mutations
 (merge, tombstone delete) and maintenance (partial compaction, defrag
-— spread-only and table-wide seq-group-bounded — full re-bucketing
-compaction, snapshot expiry) must leave the visible
+to one or two table-wide seq groups, full re-bucketing compaction,
+snapshot expiry) must leave the visible
 table state equal to a driver-side Python model after EVERY op.
 
 The per-op suites pin each operator alone (test_store_merge,
@@ -89,17 +89,15 @@ def test_lifecycle_matches_python_model(spark, tmp_path_factory, ops, n_buckets)
                 model.pop(k, None)
         elif kind == "compact":
             store.compact("nodes")
-        elif kind == "defrag":
-            store.defrag("nodes")
-        elif kind == "defrag_bounded":
-            # the table-wide seq-group bound exactly as maybe_compact's
-            # trigger path invokes it (spread disabled, bucket-granular
-            # re-homing) must be a visible-state no-op and must leave
-            # the manifest at <= 1 kept seq + 1 fresh seq
-            store.defrag("nodes", max_seq_spread=None, max_seq_groups=2)
+        elif kind in ("defrag", "defrag_bounded"):
+            # bucket-granular re-homing must be a visible-state no-op
+            # and must leave the manifest within the bound: everything
+            # at one fresh seq, or <= 1 kept seq + 1 fresh seq
+            bound = 1 if kind == "defrag" else 2
+            store.defrag("nodes", bound)
             man = store._manifest("nodes")
             if man is not None:
-                assert store._seq_group_count(man) <= 2
+                assert store._seq_group_count(man) <= bound
         elif kind == "full":
             store.compact("nodes", full=True)
         elif kind == "expire":

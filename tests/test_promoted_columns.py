@@ -286,3 +286,29 @@ def test_replace_partitions_derives_missing_promoted_column(spark, store):
 
     got = {r["id"]: r["_p_email"] for r in store.read_nodes().collect()}
     assert got == {"h1": "new@x.io", "h3": "c@x.io"}
+
+
+@pytest.mark.parametrize("labels", [["Human"], None], ids=["partial", "full"])
+def test_analysis_code_step_derives_missing_promoted_column(spark, store, labels):
+    """An analysis code step whose nodes OMIT a declared ``_p_`` column
+    must not write rows with that column NULL: the manifest still
+    declares it, so reads would NULL-fill with no props fallback and the
+    promoted-key lookup would silently miss. Pinned on the partial
+    (touched-labels) and the full rewrite path."""
+    from cartography_spark.pipeline.analysis import AnalysisJob
+    from cartography_spark.store.graphstore import NODES_SCHEMA
+
+    load(store, HUMAN, _humans(spark, [("h1", "a@x.io"), ("h2", "b@x.io")]), 100)
+    job = AnalysisJob("base_columns_only").add_step(
+        "select_base",
+        lambda nodes, edges, params: (nodes.select(*NODES_SCHEMA.fieldNames()), edges),
+        labels=labels,
+    )
+    job.run(store, 200)
+
+    rows = store.read_nodes().collect()
+    assert {r["id"]: r["_p_email"] for r in rows} == {
+        r["id"]: r["props"]["email"] for r in rows
+    } == {"h1": "a@x.io", "h2": "b@x.io"}
+    hit = store.read_nodes().where(F.col("_p_email") == "a@x.io").collect()
+    assert [r["id"] for r in hit] == ["h1"]

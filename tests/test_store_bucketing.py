@@ -185,9 +185,9 @@ def test_edges_bucket_on_src_dst(spark, tmp_path):
 
 def test_defrag_consolidates_fragmented_partitions(spark, tmp_path):
     """Bucketing makes buckets evolve at independent seqs, and every
-    distinct seq is one unioned scan in the read plan — defrag re-homes
-    fragmented partitions at one seq (bounded by fragmented-partition
-    bytes) while untouched partitions carry forward by reference."""
+    distinct seq is one unioned scan in the read plan — defrag under a
+    two-group bound keeps the heaviest seq (Other's) in place by
+    reference and re-homes every Page bucket at one fresh seq."""
     store = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
     store.merge_nodes(_bulk(spark, 200, label="Page"), 100)
     store.merge_nodes(_bulk(spark, 200, label="Other"), 100)
@@ -201,7 +201,7 @@ def test_defrag_consolidates_fragmented_partitions(spark, tmp_path):
     assert len(page_seqs) > 1  # fragmented
     other_before = man["partitions"]["Other"]
 
-    out = store.defrag("nodes")
+    out = store.defrag("nodes", max_seq_groups=2)
     assert "nodes" in out
     after = store._manifest("nodes")
     assert len({b["seq"] for b in after["partitions"]["Page"]["buckets"].values()}) == 1
@@ -209,7 +209,7 @@ def test_defrag_consolidates_fragmented_partitions(spark, tmp_path):
     rows = {r["id"]: r["props"]["v"] for r in store.read_nodes().where("label='Page'").collect()}
     assert len(rows) == 200 and rows["u2"] == "m2" and rows["u9"] == "9"
     # idempotent: nothing left to do
-    assert store.defrag("nodes") == {}
+    assert store.defrag("nodes", max_seq_groups=2) == {}
 
 
 def test_maybe_compact_triggers_defrag_on_seq_groups(spark, tmp_path):
@@ -249,9 +249,6 @@ def test_defrag_bounds_table_wide_seq_groups(spark, tmp_path):
         len(set(GraphStore._entry_seqs(p))) == 1 for p in man["partitions"].values()
     )
     assert store._seq_group_count(man) == 5
-    # spread-only defrag no-ops by design — the table-wide bound is the
-    # criterion that has to catch this shape
-    assert store.defrag("nodes") == {}
     heavy_before = {k: man["partitions"][k] for k in ("L0", "L1")}
 
     out = store.maybe_compact(max_delete_files=8, max_seq_groups=3)
@@ -292,7 +289,7 @@ def test_defrag_seq_group_rewrite_unit_is_the_bucket(spark, tmp_path):
     stray = {b for b, e in big_before.items() if e["seq"] != majority}
     assert len(stray) == 1  # exactly the u7 bucket
 
-    out = store.defrag("nodes", max_seq_spread=None, max_seq_groups=3)
+    out = store.defrag("nodes", max_seq_groups=3)
     assert "nodes" in out
     man2 = store._manifest("nodes")
     assert store._seq_group_count(man2) <= 3
@@ -333,7 +330,7 @@ def test_defrag_retries_on_concurrent_merge(spark, tmp_path):
         return out
 
     a._write_data = hook
-    out = a.defrag("nodes")
+    out = a.defrag("nodes", max_seq_groups=1)
     assert out and fired["n"] == 1  # genuinely raced and retried
     rows = {r["id"]: r["props"]["v"] for r in a.read_nodes().collect()}
     assert rows["u99"] == "race"  # the racing merge's update survived

@@ -39,7 +39,7 @@ def test_cas_rejects_stale_commit(spark, tmp_path):
         with a.transaction():
             man = a._manifest("nodes")
             v = a._allocate_version("nodes")
-            a._commit_manifest("nodes", v, man)
+            a._commit_manifests({"nodes": (v, man)})
             b.merge_nodes(_nodes_df(spark, [("B", "b1", None, {})]), 1)  # B wins the race
     # the loser published nothing: pointer still B's commit
     assert set(a._manifest("nodes")["partitions"]) == {"A", "B"}
